@@ -3,11 +3,24 @@ rows-checks these, so the real guarantees are proven here)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from udacity_datalake_spark_spark.operators.dedup import exact_dedup
-from udacity_datalake_spark_spark.plans import QUERIES
+from udacity_datalake_spark_spark import scratch
+from udacity_datalake_spark_spark.operators.dedup import (
+    MINHASH_BANDS,
+    MINHASH_K,
+    MINHASH_SCHEME,
+    _banded,
+    exact_dedup,
+    minhash_signatures,
+)
+from udacity_datalake_spark_spark.operators.text import explode_shingles
+from udacity_datalake_spark_spark.plans import ORACLE_SQL, QUERIES
 from udacity_datalake_spark_spark.sources.readers import read_table
+from tests.oracle import assert_frames_match, run_oracle
 
 
 import pytest as _pytest_cache_scope
@@ -657,3 +670,156 @@ def test_minhash_bucket_cap_bounds_candidates_keeps_recall(spark):
     mega_pairs = {(a, b) for (a, b) in un if a < 60 and b < 60}
     assert mega_pairs <= cap
     d.unpersist()
+
+
+# --- MinHash-LSH build shape ----------------------------------------------
+# The signature and the band keys are each one SQL expression
+# (``_signature_agg`` / ``_band_keys``) and must stay byte-identical to the
+# MINHASH_SCHEME = 2 per-column formula they replaced: a persisted LSH index
+# stamped with scheme 2 would otherwise silently stop colliding with fresh
+# signatures.  Also pinned: what building q95 costs before anything
+# executes, the eager gate jobs it fires.
+
+LSH_QUERIES = [
+    "q46_minhash_lsh",
+    "q95_dedup_corpus",
+    "q195_curation_pipeline",
+    "q325_incremental_lsh_probe",
+]
+
+#: Spark jobs fired while q95 is BUILT (before any action on the returned
+#: frame) on the 500-document test corpus: the collapse_exact auto-gate
+#: and connected_components' eager checkpoint and small-graph take.  A
+#: change here is a decision — a new eager action in the build path.
+Q95_JOBS_AT_BUILD = 14
+
+
+def _tier(sf_dir: str, name: str) -> str:
+    """A sibling scale-factor directory of the test tier (sf0.01, sf0.1)."""
+    path = os.path.join(os.path.dirname(sf_dir.rstrip("/")), name)
+    if not os.path.isdir(path):
+        pytest.skip(f"no {name} tier next to {sf_dir}")
+    return path
+
+
+def _reference_scheme2(df):
+    """The scheme-2 formula as it was written before the single-expression
+    build: one ``min(xxhash64(i, __sh))`` Column per permutation, one
+    ``xxhash64(b, __h…)`` Column per band.  Returns (signature, band rows)."""
+    rows = MINHASH_K // MINHASH_BANDS
+    hashed = explode_shingles(df, "doc_id", "text", 3).select(
+        "doc_id", F.xxhash64(F.col("shingle")).alias("__sh")
+    )
+    wide = hashed.groupBy("doc_id").agg(
+        *[
+            F.min(F.xxhash64(F.lit(i), F.col("__sh"))).alias(f"__h{i}")
+            for i in range(MINHASH_K)
+        ]
+    )
+    sig = wide.select(
+        "doc_id", F.array(*[F.col(f"__h{i}") for i in range(MINHASH_K)]).alias("__sig")
+    )
+    band_hashes = F.array(
+        *[
+            F.xxhash64(F.lit(b), *[F.col(f"__h{b * rows + r}") for r in range(rows)])
+            for b in range(MINHASH_BANDS)
+        ]
+    )
+    banded = wide.select(
+        "doc_id", F.posexplode(band_hashes).alias("__band_idx", "__band_hash")
+    )
+    return sig, banded
+
+
+def _planted_corpus(spark):
+    """The edge cases of the signature path: identical texts (one shared
+    signature), near-duplicates, docs under 3 tokens (no shingles, no
+    signature), an empty string and a NULL text."""
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [
+        (1, base),
+        (2, base),
+        (3, base),
+        (4, base.replace("lazy", "sleepy")),
+        (5, base + " today"),
+        (6, "an entirely different sentence about spark minhash banding"),
+        (7, "two words"),
+        (8, "one"),
+        (9, ""),
+        (10, None),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _assert_same_rows(a, b):
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+@pytest.mark.parametrize("corpus", ["sf0.01", "planted"])
+def test_single_expression_signature_is_scheme_2(spark, sf_dir, corpus):
+    """Signatures and (doc_id, __band_idx, __band_hash) rows from the
+    single-expression helpers equal the per-column scheme-2 reference,
+    as multisets (exceptAll empty both ways)."""
+    assert MINHASH_SCHEME == 2  # bump it (and this reference) together
+    if corpus == "planted":
+        df = _planted_corpus(spark)
+    else:
+        df = read_table(spark, _tier(sf_dir, corpus), "documents")
+    df = df.select("doc_id", "text").persist()
+    try:
+        ref_sig, ref_banded = _reference_scheme2(df)
+        sig = minhash_signatures(df, "doc_id", "text")
+        _assert_same_rows(sig, ref_sig)
+        banded = _banded(sig, "doc_id", MINHASH_K, MINHASH_BANDS)
+        _assert_same_rows(banded, ref_banded)
+        if corpus == "planted":
+            sigs = {r.doc_id: r["__sig"] for r in sig.collect()}
+            # docs 7-10 have no shingle, hence no signature; identical
+            # texts share theirs
+            assert sorted(sigs) == [1, 2, 3, 4, 5, 6]
+            assert sigs[1] == sigs[2] == sigs[3] != sigs[6]
+    finally:
+        df.unpersist()
+
+
+def test_signature_is_one_aggregate_column(spark):
+    """Structural guard: the signature aggregate outputs the id and ONE
+    array column of k minima, not k scalar columns."""
+    sig = minhash_signatures(_planted_corpus(spark), "doc_id", "text")
+    agg = sig._jdf.queryExecution().analyzed()
+    assert agg.nodeName() == "Aggregate"
+    assert agg.aggregateExpressions().size() == 2  # doc_id, __sig
+    assert sig.columns == ["doc_id", "__sig"]
+    assert sig.schema["__sig"].dataType.simpleString() == "array<bigint>"
+    assert {len(r["__sig"]) for r in sig.collect()} == {MINHASH_K}
+
+
+def test_q95_build_fires_pinned_job_count(spark, sf_dir):
+    """Build-cost guard: count the Spark jobs that building q95 fires
+    (nothing is executed on the returned frame) from the status store,
+    under a job group set around the build."""
+    sc = spark.sparkContext
+    group = "test-q95-build-jobs"
+    sc.setJobGroup(group, "q95_dedup_corpus build")
+    try:
+        QUERIES["q95_dedup_corpus"](spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        scratch.release()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == Q95_JOBS_AT_BUILD
+
+
+@pytest.mark.parametrize("tier", ["sf0.01", "sf0.1"])
+@pytest.mark.parametrize("name", LSH_QUERIES)
+def test_lsh_queries_match_oracle_across_tiers(spark, sf_dir, tier, name):
+    """Every query built on the MinHash helpers matches its exact-Jaccard
+    oracle at sf0.01 and at sf0.1, where band recall has 10x the
+    documents to miss on."""
+    d = _tier(sf_dir, tier)
+    try:
+        pdf = QUERIES[name](spark, d).toPandas()
+    finally:
+        scratch.release()
+    assert_frames_match(pdf, run_oracle(ORACLE_SQL[name], d))

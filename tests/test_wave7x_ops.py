@@ -303,3 +303,71 @@ def test_association_rules_planted_confidence_lift(spark, tmp_path):
     }
     assert got[("Y", "X")] == (1.0, 1.0, 10)
     assert got[("X", "Y")] == (0.5, 1.0, 10)
+
+
+def test_apriori_counts_all_null_basket(spark, tmp_path):
+    """A basket whose only item has a NULL brand collects to an EMPTY
+    item array; it is still a basket, so it must count toward the
+    support denominator nb, as the oracle's count(DISTINCT o) counts it.
+    Planted at the threshold edge: order 1 holds {A, B, C}, orders
+    2..200 hold D alone, order 201 holds only the NULL-brand part.  With
+    nb = 201 the triple's support 1 misses 1 * 200 >= 201, so the result
+    is empty; dropping the empty basket (nb = 200) would report it."""
+    import duckdb
+
+    from tests.oracle import assert_frames_match
+    from udacity_datalake_spark_spark.plans import ORACLE_SQL
+
+    d = str(tmp_path / "fx")
+    parts = {"A": 1, "B": 2, "C": 3, "D": 4, None: 5}
+    rows = [(1, parts[b]) for b in ("A", "B", "C")]
+    rows += [(o, parts["D"]) for o in range(2, 201)]
+    rows.append((201, parts[None]))
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").write.mode(
+        "overwrite"
+    ).parquet(f"{d}/lineitem.parquet")
+    spark.createDataFrame(
+        [(v, None if k is None else f"Brand#{k}") for k, v in parts.items()],
+        "p_partkey long, p_brand string",
+    ).write.mode("overwrite").parquet(f"{d}/part.parquet")
+    pdf = QUERIES["q373_apriori_triples"](spark, d).toPandas()
+    con = duckdb.connect()
+    for t in ("lineitem", "part"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet/*.parquet'")
+    expected = con.sql(ORACLE_SQL["q373_apriori_triples"]).df()
+    assert len(expected) == 0
+    assert_frames_match(pdf, expected)
+
+
+def test_apriori_prefilter_keeps_baskets_ascending(spark):
+    """The downward-closure prefilter intersects each sorted basket with
+    the member array; the triple enumeration needs the result ascending.
+    Plant members whose order differs from the baskets' item order
+    (items inserted descending, junk items sorting between the members)
+    and check the prefiltered result equals a brute-force count."""
+    from itertools import combinations
+
+    from udacity_datalake_spark_spark.plans.wave67 import apriori_triples
+
+    baskets = {}
+    for o in range(12):
+        items = ["m9", "m5", "m1"] + (["m7"] if o % 2 else ["m3"])
+        # per-basket singletons m2_…, m4_…, m6_…, m8_… sort between the
+        # members, so the prefilter drops items from inside the array
+        items += [f"m{2 * j}_junk{o}" for j in range(1, 5)]
+        baskets[o] = items
+    rows = [(o, p) for o, items in baskets.items() for p in items]
+    items = spark.createDataFrame(rows, "o long, p string")
+
+    denom = 3
+    counts = {}
+    for ps in baskets.values():
+        for t in combinations(sorted(set(ps)), 3):
+            counts[t] = counts.get(t, 0) + 1
+    expected = sorted(
+        t + (c,) for t, c in counts.items() if c * denom >= len(baskets)
+    )
+    out = apriori_triples(items, support_denom=denom, prefilter_universe_gt=0)
+    got = sorted((r.p1, r.p2, r.p3, r.support) for r in out.collect())
+    assert got == expected
+    assert ("m1", "m5", "m9", 12) in got

@@ -12,8 +12,10 @@ Differences by design:
   production with ``session.s3a_conf()`` — so no bucket bootstrap logic
   lives here (reference buckets_dropcreate.py:8-63 is AWS account
   plumbing, out of engine scope);
-- songs/artists are reused in-memory between the two pipelines instead
-  of re-read from freshly-written parquet (same values, one lineage).
+- songs/artists are re-read from the freshly-written parquet, as in the
+  reference, and the reference's read-back shape (partition columns
+  dropped, SURVEY.md §4.3.4) is reproduced by
+  ``sparkify.songs_readback_shape``.
 
 Usage (spark-submit takes a script path, not a module flag)::
 

@@ -14,7 +14,7 @@ no RNG at runtime.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from udacity_datalake_spark_spark.operators.text import (
@@ -34,7 +34,8 @@ MINHASH_K = 128  # signature length
 #: produces zero collisions against fresh signatures — silently missed
 #: near-dups, no error — so deployments must stamp their indexes with
 #: this constant and invalidate on mismatch.  Bump it whenever the
-#: signature derivation changes.  In-repo paths always recompute both
+#: signature derivation (``_signature_agg``) or the band key
+#: (``_band_keys``) changes.  In-repo paths always recompute both
 #: sides, so they are scheme-agnostic.
 MINHASH_SCHEME = 2
 # 32 bands × 4 rows: a pair at exactly J=0.6 collides in ≥1 band with
@@ -348,7 +349,7 @@ def shingle_containment_pairs(
 
 
 def _signature_agg(hashed: DataFrame, id_col: str, k: int) -> DataFrame:
-    """The one place the MinHash scheme lives (ADVICE r11): k-permutation
+    """The one place the MinHash signature lives (ADVICE r11): k-permutation
     signature aggregation over ``(id, __sh)`` rows, where ``__sh`` is the
     64-bit ``xxhash64(shingle)`` of each distinct shingle.  Permutation i
     is ``xxhash64(i, __sh)`` — the one-hash construction
@@ -356,11 +357,30 @@ def _signature_agg(hashed: DataFrame, id_col: str, k: int) -> DataFrame:
     ``_banded``/``incremental_lsh_probe``/``minhash_band_stats``) and
     ``minhash_lsh_pairs`` (which aggregates from its persisted shingle
     arrays) call this, so a future scheme change cannot desynchronize
-    banding between the index builders and the probe path."""
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("__sh"))).alias(f"__h{i}") for i in range(k)
-    ]
-    return hashed.groupBy(id_col).agg(*mins)
+    banding between the index builders and the probe path.
+
+    Returns ``(id, __sig)``: the k minima as one ``array<bigint>``, from
+    ONE SQL expression — one py4j call instead of k ``F.*`` Column chains,
+    still planned as a codegen'd hash aggregate.  (A lambda form,
+    ``transform(sequence(0, k-1), …)``, is interpreted, hence slower.)"""
+    mins = ", ".join(f"min(xxhash64({i}, __sh))" for i in range(k))
+    return hashed.groupBy(id_col).agg(F.expr(f"array({mins})").alias("__sig"))
+
+
+def _band_keys(k: int, bands: int) -> Column:
+    """The one place the LSH band key lives: an ``array<bigint>`` of
+    ``bands`` keys over a ``__sig`` column, band b's key being
+    ``xxhash64(b, __sig[b·r], …, __sig[b·r + r − 1])`` with r = k/bands
+    rows per band.  One SQL expression, like the signature; callers
+    ``posexplode`` it into ``(__band_idx, __band_hash)`` rows."""
+    rows = k // bands
+    keys = ", ".join(
+        "xxhash64({}, {})".format(
+            b, ", ".join(f"__sig[{b * rows + r}]" for r in range(rows))
+        )
+        for b in range(bands)
+    )
+    return F.expr(f"array({keys})")
 
 
 def minhash_signatures(
@@ -382,7 +402,8 @@ def minhash_signatures(
     scales with corpus bytes.  Downstream consumers only ever use
     signatures for banding; every registered output is exact-verified
     after candidate generation, and band recall on the fixtures is
-    re-proven by the oracle parity suite (q46/q95/q195/q325 MATCH)."""
+    re-proven by the oracle parity suite (q46/q95/q195/q325 MATCH).
+    Returns ``(id, __sig)`` (see ``_signature_agg``)."""
     sh = explode_shingles(df, id_col, text_col, n)
     hashed = sh.select(F.col(id_col), F.xxhash64(F.col("shingle")).alias("__sh"))
     return _signature_agg(hashed, id_col, k)
@@ -514,30 +535,19 @@ def minhash_lsh_pairs(
         F.col(id_col), F.xxhash64(F.col("shingle")).alias("__sh")
     )
     sig = _signature_agg(hashed, id_col, k)
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), *[F.col(f"__h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
     # stack bands into rows — ONE self-equi-join on (band_idx, band_hash)
     # instead of `bands` separate joins each recomputing the signature plan
     if max_bucket_rows is not None:
         # per-band secondary = first minhash row of the NEXT band,
         # zipped in so the explode carries exactly one extra long
-        sec_hashes = F.array(
-            *[
-                F.col(f"__h{((b + 1) % bands) * rows_per_band}")
-                for b in range(bands)
-            ]
+        secondary = ", ".join(
+            f"__sig[{((b + 1) % bands) * rows_per_band}]" for b in range(bands)
         )
         banded = sig.select(
             F.col(id_col),
-            F.posexplode(F.arrays_zip(band_hashes, sec_hashes)).alias(
-                "__band_idx", "__z"
-            ),
+            F.posexplode(
+                F.arrays_zip(_band_keys(k, bands), F.expr(f"array({secondary})"))
+            ).alias("__band_idx", "__z"),
         ).select(
             id_col,
             "__band_idx",
@@ -560,10 +570,7 @@ def minhash_lsh_pairs(
         bucket_keys = ["__band_idx", "__band_hash", "__sub"]
     else:
         # single consumer since the bucket-local rewrite below — no persist
-        banded = sig.select(
-            F.col(id_col),
-            F.posexplode(band_hashes).alias("__band_idx", "__band_hash"),
-        )
+        banded = _banded(sig, id_col, k, bands)
         bucket_keys = ["__band_idx", "__band_hash"]
     # Bucket-local pair generation (round 12, guide §2.4/§1.2): group the
     # banded rows ONCE on the bucket key and emit each bucket's ordered id
@@ -657,19 +664,11 @@ def minhash_band_stats(
 
 
 def _banded(sig: DataFrame, id_col: str, k: int, bands: int) -> DataFrame:
-    """Stack a minhash signature frame into (id, band_idx, band_hash) rows
-    — the LSH index layout (one row per band per doc)."""
-    rows_per_band = k // bands
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), *[F.col(f"__h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
+    """Stack a ``(id, __sig)`` signature frame into (id, band_idx,
+    band_hash) rows — the LSH index layout (one row per band per doc)."""
     return sig.select(
-        F.col(id_col), F.posexplode(band_hashes).alias("__band_idx", "__band_hash")
+        F.col(id_col),
+        F.posexplode(_band_keys(k, bands)).alias("__band_idx", "__band_hash"),
     )
 
 

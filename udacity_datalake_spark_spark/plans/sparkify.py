@@ -154,9 +154,9 @@ def process_song_data(spark, song_data: DataFrame, output_dir: str) -> None:
 def process_log_data(spark, log_data: DataFrame, output_dir: str) -> None:
     """Pipeline 2 (reference etl.py:65-173): users, time, songplays.
 
-    Unlike the reference, songs/artists are reused in-memory rather than
-    re-read from the just-written parquet — same values, one lineage;
-    the read-back shape is reproduced by ``songs_readback_shape``.
+    As in the reference, songs/artists are re-read from the parquet that
+    ``process_song_data`` just wrote; the reference's read-back shape is
+    reproduced by ``songs_readback_shape``.
     """
     events = filter_songplay_events(log_data)
     write_parquet(build_users(events), f"{output_dir}/users", target_files=1)

@@ -199,10 +199,11 @@ def q45_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q46_minhash_lsh", oracle=_JACCARD_ORACLE)
 def q46_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(64) + 16-band LSH candidates, exact-Jaccard verified — the
-    linear-scan near-dup path for 100 TB.  Oracle is the exact-Jaccard SQL:
-    banding recall for the corpus's J≈0.98 pairs is 1-(1-J⁴)¹⁶ ≈ 1, and
-    verification makes precision exact, so outputs coincide."""
+    """MinHash(128) + 32-band LSH candidates (4 rows per band),
+    exact-Jaccard verified — the linear-scan near-dup path for 100 TB.
+    Oracle is the exact-Jaccard SQL: banding recall for the corpus's
+    J≈0.98 pairs is 1-(1-J⁴)³² ≈ 1, and verification makes precision
+    exact, so outputs coincide."""
     d = read_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(d, "doc_id", "text", n=3, threshold=0.6)
 

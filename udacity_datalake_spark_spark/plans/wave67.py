@@ -110,7 +110,8 @@ def apriori_triples(
     prefilter_universe_gt: int = 1024,
 ) -> DataFrame:
     """One Apriori level (Agrawal & Srikant 1994) over a distinct
-    ``(o, p)`` basket-item frame (``p`` non-null): frequent 3-itemsets
+    ``(o, p)`` basket-item frame (a NULL ``p`` is never an item, but its
+    basket still counts toward the support denominator): frequent 3-itemsets
     at relative support ≥ 1/``support_denom`` of baskets.  Candidate
     triples come ONLY from joining frequent pairs sharing their first
     item, pruned by the third-subset-frequent check; one counting pass
@@ -144,8 +145,11 @@ def apriori_triples(
     # branch, and mixing a second EXACT distinct into the same agg would
     # plan an Expand that doubles the scan).  Running it over the
     # exploded persisted baskets materializes the cache in the same job.
+    # explode_OUTER: a basket whose items are all NULL collects to an
+    # empty array, and plain explode would drop it from ``nb`` — the
+    # support denominator must count every basket, as the oracle does.
     st = (
-        baskets.select("o", F.explode("__ps").alias("p"))
+        baskets.select("o", F.explode_outer("__ps").alias("p"))
         .agg(
             F.countDistinct("o").alias("nb"),
             F.approx_count_distinct("p").alias("np"),
@@ -199,7 +203,9 @@ def apriori_triples(
     # enumeration at the source — exactly the regime that matters at
     # 100 TB.  With array-shaped baskets the filter is a map-side
     # array_intersect against the broadcast member array — no explode,
-    # no re-grouping exchange.
+    # no re-grouping exchange.  The result is re-sorted explicitly:
+    # ``_asc_pairs`` needs ascending arrays, and array_intersect's output
+    # order is an implementation detail, not a contract.
     if n_items_universe > prefilter_universe_gt:
         members = (
             pairs.select(F.col("p1").alias("p"))
@@ -209,7 +215,7 @@ def apriori_triples(
         )
         enum_baskets = (
             baskets.crossJoin(F.broadcast(members))
-            .select(F.array_intersect("__ps", "__members").alias("__ps"))
+            .select(F.sort_array(F.array_intersect("__ps", "__members")).alias("__ps"))
         )
     else:
         enum_baskets = baskets
