@@ -1,12 +1,19 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints exactly one JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints up to three JSON lines: the sf0.01 scaling slopes, the per-query
+detail, and LAST a compact summary
+  {"metric": "headline_queries_total", "value": N, "unit": "sec",
+   "n_queries": ..., "sf": ...}
+The full record, stamped with the host that produced it, is mirrored to
+BENCH_HEADLINE.json (BENCH_LOCAL.json for the full sweep).
 
 Each query is executed to completion with the no-op sink (full pipeline
 runs — scan, shuffle, aggregate — without driver-side collect overhead
-distorting the number).
+distorting the number).  Wall time is the headline only: regressions
+are gated structurally by tests/fixtures/plan_budgets.json (plan shape)
+and the pinned build-time job counts in tests/test_llm_ops.py, and per
+change by the paired A/B in perfbench/.
 """
 
 from __future__ import annotations
@@ -14,12 +21,13 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
 from udacity_datalake_spark_spark import scratch
 from udacity_datalake_spark_spark.plans import QUERIES
-from udacity_datalake_spark_spark.session import get_session
+from udacity_datalake_spark_spark.session import get_session, physical_memory_bytes
 
 # Headline policy (round 6): the driver captures only a 2000-char stdout
 # TAIL and parses the LAST line.  Rounds 3 and 5 both broke parsing by
@@ -192,88 +200,14 @@ HEADLINE_FULL = [
 ]
 
 
-# Regression adjudication rule (round 8, VERDICT r7 item #1): raw
-# seconds on a throttle-prone shared host are NOT the regression signal
-# — r7 shipped q95 ×1.52 raw while its own calibration probe showed a
-# throttle window (start 0.206 s vs end 0.074 s).  The rule, pinned by
-# tests/test_catalog.py::test_bench_regression_rule:
-#   * every query is normalized by the sweep's mean probe time
-#     (normalized = raw_sec / calibration_mean_sec);
-#   * the committed BENCH_REF.json holds the reference normalized times
-#     (a clean-window frozen-42 sweep; refresh it only with a
-#     probe ≤ REF_PROBE_CEILING run and say so in SCALE.md);
-#   * a query REGRESSES iff normalized / ref_normalized >
-#     REGRESSION_FLAG_RATIO.  Raw drift with in-family normalized time
-#     is adjudicated "host throttle", not a code regression.
-#   * PERSISTENCE (late round 8): a single-sweep exceedance is a
-#     CANDIDATE, not a regression.  Measured falsification: between two
-#     same-day uniform idle windows on byte-identical code, per-query
-#     min-of-5 raws at sf0.1 swung ×0.38–×1.70 with no correlation to
-#     exchange count or python_eval (SCALE.md r8 — the per-probe-class
-#     normalization idea died on this data).  Window noise at the 1-5 s
-#     scale is uncorrelated ACROSS windows, while a real code
-#     regression persists in every window — so a query only lands in
-#     `regressed_normalized` when it exceeds the bar in THIS uniform
-#     sweep AND in the most recent prior uniform sweep of the same
-#     sf/headline-set (recomputed against the current reference from
-#     bench_history.jsonl).  Candidates are still printed and mirrored,
-#     so nothing is hidden while unconfirmed.
-#   * DUAL VIEW (second late-r8 amendment): a candidate must exceed the
-#     bar in BOTH views — normalized AND raw-vs-reference-raw — in the
-#     same window (and in the prior window, for confirmation).  The
-#     codegen probe and the exchange/scheduler path throttle
-#     INDEPENDENTLY (measured ×1.5-1.7 mode splits both ways): a
-#     throttle window inflates raw while normalized stays flat (the r7
-#     drift), and a fast-probe window inflates normalized while raw is
-#     flat or better (the 2026-08-16 sweep: total raw 47.0 s vs ref
-#     50.5 s yet 15 normalized "flags" at probe 0.092 vs ref 0.127).  A
-#     real code regression inflates BOTH in EVERY window, so requiring
-#     agreement removes both whole-sweep phantom classes without
-#     loosening either bar.
-REGRESSION_FLAG_RATIO = 1.3
-# this host's observed idle probe norm is 0.05-0.15 s (BENCH_SF1.json's
-# two clean sessions recorded 0.09-0.14 "throughout — idle norm";
-# r7's sweep-end probe read 0.0745): a reference sweep whose mean probe
-# exceeds 0.15 was taken under real throttle and must not be committed.
-REF_PROBE_CEILING = 0.15
-# normalization assumes the throttle is UNIFORM across the sweep — the
-# probe inflates in proportion to the queries.  A start/end probe ratio
-# beyond 2x (r8 observed a 1.43s-start / 0.05s-end window) means the
-# throttle opened or closed MID-sweep; per-query normalization by the
-# mean is then meaningless and drift is recorded as unadjudicatable
-# rather than silently mis-normalized.
-CAL_UNIFORM_MAX_RATIO = 2.0
-# Retake trigger (round 9, VERDICT r8 #2): SCALE.md's stated policy
-# was to retake the reference when a ≤0.08 uniform window appears;
-# bench.py enforces it — any frozen-42 sweep whose uniform dual-probe
-# window mean is ≤ this value AND beats the committed reference's
-# probe prints a `reference_retake_available` line.  Since the r9
-# series-median amendment (SCALE.md r9: a single window's normalized
-# view carries its probe's mode bias wholesale — measured 1.4-1.65x
-# below the 9-window medians on ALL queries), the recommended refresh
-# is `scripts/retake_ref.py --from-series`, which folds the new
-# window's committed history entry into the per-query dual-view
-# medians; the trigger marks the moment a fresh fast window has
-# enriched the series.
-REF_RETAKE_PROBE = 0.08
-REF_NAME = "BENCH_REF.json"
-HISTORY_NAME = "bench_history.jsonl"
-# Duration-scaled repeats (round 10, VERDICT r9 #5): the q05
-# adjudication (SCALE.md r9) measured that a min-of-5 of a ~0.2 s job
-# carries window-to-window variance wider than the 1.3x flag bar — the
-# per-run noise floor (scheduler round-trips, GC pauses) is a fixed
-# ~0.05-0.1 s that dominates sub-second members.  Every member now
-# accumulates at least MIN_TIMED_WORK_SEC of timed work (more draws →
-# the min converges), capped at MAX_REPEATS so a pathological slow
-# query can't stall the sweep.  Multi-second members still run exactly
-# the base repeats, so the headline total's cost is unchanged where it
-# matters.
-# Methodology provenance (ADVICE r10): min-over-9 is one-sidedly faster
-# than the pre-change min-over-5 on sub-second members, so a series
-# reference mixing pre/post-change windows biases those members' drift
-# ratios until old windows age out.  The like-for-like fix is
-# scripts/retake_ref.py --from-series --since 1786891301 (the change's
-# commit ts) once >= 6 post-change uniform windows are committed.
+# Duration-scaled repeats (round 10): a min-of-5 of a ~0.2 s job carries
+# run-to-run variance wider than its own cost differences — the per-run
+# noise floor (scheduler round-trips, GC pauses) is a fixed ~0.05-0.1 s
+# that dominates sub-second members.  Every member now accumulates at
+# least MIN_TIMED_WORK_SEC of timed work (more draws → the min
+# converges), capped at MAX_REPEATS so a pathological slow query can't
+# stall the sweep.  Multi-second members still run exactly the base
+# repeats, so the headline total's cost is unchanged where it matters.
 MIN_TIMED_WORK_SEC = 2.0
 MAX_REPEATS = 9
 DEFAULT_REPEATS = 5
@@ -293,149 +227,25 @@ def _needs_another_run(runs: int, acc_sec: float, min_runs: int) -> bool:
     return acc_sec < MIN_TIMED_WORK_SEC and runs < MAX_REPEATS
 
 
-def _load_ref() -> dict:
-    """Committed per-query normalized reference, or {} if absent."""
+def host_stamp(spark) -> dict:
+    """Which host produced a record: a wall-clock number taken on a
+    different core count or memory size is not a comparison."""
+    mem = physical_memory_bytes()
     try:
-        with open(os.path.join(os.path.dirname(__file__), REF_NAME)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return {}
-
-
-def _prior_uniform_normalized(sf, set_name: str) -> dict:
-    """Per-query normalized times of the most recent COMMITTED
-    uniform-window sweep of the same sf/headline-set (bench_history.jsonl),
-    or {} when none exists.  Used by the persistence rule: a drift flag
-    must reproduce across two consecutive uniform windows to count."""
-    try:
-        with open(os.path.join(os.path.dirname(__file__), HISTORY_NAME)) as f:
-            entries = [json.loads(ln) for ln in f if ln.strip()]
-    except (OSError, ValueError):
-        return {}
-    for e in reversed(entries):
-        if (
-            e.get("sf") == sf
-            and e.get("set") == set_name
-            and e.get("calibration_uniform")
-        ):
-            return e.get("queries_normalized", {}) or {}
-    return {}
-
-
-def _prior_uniform_raw(sf, set_name: str) -> dict:
-    """Raw-seconds twin of _prior_uniform_normalized, for the dual-view
-    persistence check."""
-    try:
-        with open(os.path.join(os.path.dirname(__file__), HISTORY_NAME)) as f:
-            entries = [json.loads(ln) for ln in f if ln.strip()]
-    except (OSError, ValueError):
-        return {}
-    for e in reversed(entries):
-        if (
-            e.get("sf") == sf
-            and e.get("set") == set_name
-            and e.get("calibration_uniform")
-        ):
-            return e.get("queries", {}) or {}
-    return {}
-
-
-def _usable(*vals) -> bool:
-    """True iff every value is a present, positive number.  Explicit on
-    purpose (ADVICE r8): a truthiness check (`pv and rv`) treats a
-    legitimate-but-sub-resolution 0.0 timing as MISSING data and
-    silently disables the rule for that query; `is not None` + `> 0`
-    keeps "absent" and "zero" distinguishable (neither can form a
-    ratio, but absence falls through the documented missing-data path
-    while a zero is a data-quality signal, not a gap)."""
-    return all(v is not None and v > 0 for v in vals)
-
-
-def _confirm_regressed(
-    candidates: list[str],
-    prior_norm: dict,
-    ref_norm: dict,
-    prior_raw: dict | None = None,
-    ref_raw: dict | None = None,
-    missing_raw_out: list | None = None,
-) -> list[str]:
-    """Candidates that ALSO exceeded the flag bar in the prior uniform
-    sweep (drift recomputed against the CURRENT reference, so a
-    reference refresh between sweeps stays coherent).  A candidate with
-    no prior measurement stays unconfirmed — one window is never
-    enough.  When prior_raw/ref_raw are supplied (the dual-view rule,
-    second r8 amendment), the prior window must ALSO show the raw
-    exceedance: a probe-mode swing moves exactly one of the two views,
-    a real regression moves both.
-
-    Missing-raw symmetry (ADVICE r8): the candidate stage fails OPEN
-    when the reference lacks a raw entry (flag on normalized alone);
-    this stage used to fail CLOSED on the same gap — with an
-    old-format reference a real regression could never be confirmed,
-    silently.  Now a per-query missing raw datum skips the raw check
-    (normalized persistence alone confirms, mirroring the candidate
-    stage) and the query is appended to ``missing_raw_out`` so the
-    degraded single-view mode is visible in the artifact."""
-    out = []
-    for n in candidates:
-        pv, rv = prior_norm.get(n), ref_norm.get(n)
-        if not _usable(pv, rv) or (pv / rv) <= REGRESSION_FLAG_RATIO:
-            continue
-        if prior_raw is not None and ref_raw is not None:
-            pr, rr = prior_raw.get(n), ref_raw.get(n)
-            if _usable(pr, rr):
-                if (pr / rr) <= REGRESSION_FLAG_RATIO:
-                    continue
-            elif missing_raw_out is not None:
-                missing_raw_out.append(n)
-        out.append(n)
-    return out
-
-
-def _calibration_probe(spark, repeats: int = 3) -> float:
-    """Fixed-cost JVM-side probe: min wall-clock of a constant 10^7-row
-    range aggregation (pure whole-stage-codegen, no I/O, no shuffle
-    variance).  Its cost is invariant to SF and query mix, so a throttle
-    window on the host shows up as probe inflation INSIDE the artifact —
-    round 6 needed two-hour-apart solo re-runs to prove a uniform +40%
-    wall-clock event was host-side, not a code regression (SCALE.md
-    throttle note); this field makes that diagnosis a one-line division.
-    Per-query times normalized by the probe are mirrored alongside the
-    raw seconds."""
-    best = float("inf")
-    for _ in range(max(1, repeats)):
-        t0 = time.perf_counter()
-        spark.range(10_000_000).selectExpr("sum(id * 2 + 1) AS s").write.format(
-            "noop"
-        ).mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def _shuffle_probe(spark, repeats: int = 3) -> float:
-    """Second probe mode (round 8): a fixed-size shuffle+agg job.  The
-    codegen probe is pure in-core compute; r8 observed the host's Spark
-    throughput swing ×2-2.5 within an hour (q95 7.40 s solo at load
-    0.03 vs 3.97 s in a sweep 20 min earlier, identical code) while the
-    codegen probe moved only ×1.5 — the throttle hits the exchange/
-    scheduler path harder than the ALU path.  Recording both lets a
-    future round separate the two modes.  Not used for normalization
-    yet (continuity with the r7 artifact's single-probe series)."""
-    from pyspark.sql import functions as F
-
-    best = float("inf")
-    for _ in range(max(1, repeats)):
-        t0 = time.perf_counter()
-        (
-            spark.range(2_000_000)
-            .groupBy((F.col("id") % 4096).alias("k"))
-            .count()
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+        ).stdout.strip() or None
+    except OSError:
+        sha = None
+    return {
+        "nproc": len(os.sched_getaffinity(0)),
+        "mem_gb": round(mem / 2**30, 1) if mem else None,
+        "spark_version": spark.version,
+        "git_sha": sha,
+    }
 
 
 def main() -> None:
@@ -460,31 +270,18 @@ def main() -> None:
         if name in QUERIES:
             QUERIES[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
 
-    # Calibration probe (round 7, VERDICT r6 item #8): a constant-cost
-    # JVM-side measurement taken at sweep start and sweep end, so a host
-    # throttle window that opens mid-sweep is detectable inside the
-    # artifact (start ≪ end or both ≫ the committed ~0.05 s idle norm).
-    cal_start = _calibration_probe(spark)
-    shuf_start = _shuffle_probe(spark)
-
     # Repeat each query and report the MIN: single-shot numbers on a
     # shared machine are noise-dominated (r01's bench recorded 45.8s for
     # a query that times at ~12s idle); the min of a few runs is the
-    # stable estimate of what the plan actually costs.  Default raised
-    # to 5 in round 6: the sandbox VM showed sustained ~40% wall-clock
-    # inflation under host-side throttling (identical code, 2% steal,
-    # idle guest — q212 drifted 2.35 -> 3.38s within two hours), and a
-    # deeper min is the only defense a guest has.
+    # stable estimate of what the plan actually costs.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5")))
     timings: dict[str, float] = {}
     for name in headline:
         if name not in QUERIES:
             continue
-        # duration-scaled min (round 10, VERDICT r9 #5): at least
-        # `repeats` runs, extended up to MAX_REPEATS while the member
-        # has accumulated under MIN_TIMED_WORK_SEC of timed work — the
-        # sub-second members draw more samples so their min escapes the
-        # fixed per-run noise floor
+        # duration-scaled min: at least `repeats` runs, extended up to
+        # MAX_REPEATS while the member has accumulated under
+        # MIN_TIMED_WORK_SEC of timed work
         best, acc, runs = float("inf"), 0.0, 0
         while _needs_another_run(runs, acc, repeats):
             t0 = time.perf_counter()
@@ -495,11 +292,10 @@ def main() -> None:
             runs += 1
             # operator-internal persist() frames (dedup/similarity
             # multi-branch plans) are scoped to one query — drop them so
-            # repeats and later queries don't read a warmed cache.
-            # Targeted tracker release since round 11 (VERDICT r10 #2):
-            # every package persist routes through scratch.spersist, so
-            # this frees exactly the query's frames (outside the timed
-            # region) instead of blowing the whole session cache.
+            # repeats and later queries don't read a warmed cache.  Every
+            # package persist routes through scratch.spersist, so this
+            # frees exactly the query's frames (outside the timed region)
+            # instead of blowing the whole session cache.
             scratch.release()
         timings[name] = round(best, 4)
 
@@ -526,92 +322,18 @@ def main() -> None:
             slopes[name] = round(timings[name] / best, 2) if best > 0 else 0.0
         flagged = [n for n, r in slopes.items() if r >= 20.0]
 
-    cal_end = _calibration_probe(spark)
-    shuf_end = _shuffle_probe(spark)
-    # Normalized view: per-query seconds divided by the sweep's mean probe
-    # time.  Under uniform host throttling the normalized numbers stay
-    # comparable round-over-round even when the raw seconds inflate.
-    cal_mean = round((cal_start + cal_end) / 2.0, 4)
-    normalized = (
-        {n: round(t / cal_mean, 2) for n, t in timings.items()} if cal_mean > 0 else {}
-    )
-
-    # Adjudicate drift against the committed clean-window reference on
-    # NORMALIZED numbers (see REGRESSION_FLAG_RATIO note above) — but
-    # only when the sweep's own calibration window was uniform; a
-    # mid-sweep throttle transition makes mean-probe normalization lie.
-    lo, hi = min(cal_start, cal_end), max(cal_start, cal_end)
-    cal_uniform = lo > 0 and (hi / lo) <= CAL_UNIFORM_MAX_RATIO
-    ref = _load_ref()
-    # the reference only adjudicates like-for-like sweeps: same scale
-    # factor and same headline set (an sf0.01 CLI smoke run must not be
-    # "regressed" against the sf0.1 reference)
-    ref_comparable = ref.get("sf") == sf and ref.get("headline_set") == (
-        "full" if headline is HEADLINE_FULL else "frozen42"
-    )
-    ref_norm = ref.get("queries_normalized", {}) if ref_comparable else {}
-    ref_raw = ref.get("queries_raw", {}) if ref_comparable else {}
-    drift_vs_ref: dict[str, float] = {}
-    drift_raw_vs_ref: dict[str, float] = {}
-    regressed_candidates: list[str] = []
-    regressed_normalized: list[str] = []
-    raw_view_missing: list[str] = []
-    if cal_uniform:
-        # Dual-view candidate rule (second r8 amendment): a candidate
-        # must exceed the bar in BOTH the normalized view AND the raw
-        # view.  The codegen probe and the exchange path move
-        # independently (measured ×1.5-1.7 mode splits, SCALE.md r8);
-        # a probe-mode swing inflates exactly ONE view (fast probe →
-        # normalized up while raw is flat/down; throttle → raw up while
-        # normalized is flat), whereas a real code regression inflates
-        # both in every window.  Requiring agreement kills the
-        # whole-sweep phantom classes seen on 2026-08-15 (raw-up) and
-        # 2026-08-16 (normalized-up) without loosening either bar.
-        for n, v in normalized.items():
-            rv = ref_norm.get(n)
-            if not _usable(rv):
-                continue
-            drift_vs_ref[n] = round(v / rv, 2)
-            rr = ref_raw.get(n)
-            raw_ratio = (timings[n] / rr) if _usable(rr) else None
-            if raw_ratio is not None:
-                drift_raw_vs_ref[n] = round(raw_ratio, 2)
-            if drift_vs_ref[n] > REGRESSION_FLAG_RATIO:
-                if raw_ratio is None:
-                    # raw view unavailable for this query (old-format or
-                    # incomplete reference): fail OPEN on normalized
-                    # alone, and record the degradation (ADVICE r8 —
-                    # the confirm stage mirrors this, so single-view
-                    # mode is symmetric end-to-end and visible)
-                    raw_view_missing.append(n)
-                    regressed_candidates.append(n)
-                elif raw_ratio > REGRESSION_FLAG_RATIO:
-                    regressed_candidates.append(n)
-        # persistence rule: confirm only what the PREVIOUS uniform
-        # window also flagged — in both views (single-window swings
-        # measured ×0.38-1.70 on frozen code — see REGRESSION_FLAG_RATIO
-        # note)
-        set_name = "full" if headline is HEADLINE_FULL else "frozen42"
-        prior_norm = _prior_uniform_normalized(sf, set_name)
-        regressed_normalized = _confirm_regressed(
-            regressed_candidates,
-            prior_norm,
-            ref_norm,
-            prior_raw=_prior_uniform_raw(sf, set_name),
-            ref_raw=ref_raw,
-            missing_raw_out=raw_view_missing,
-        )
-
     total = round(sum(timings.values()), 4)
     # The driver captures the TAIL of stdout and parses the LAST JSON
     # line.  Rounds 3 AND 5 both produced "parsed": null by letting the
     # final line carry a per-query dict that outgrew the 2000-char tail
     # window.  Structural fix: slopes and the per-query timings dict each
-    # go on their OWN earlier line (and into BENCH_LOCAL.json on disk);
-    # the LAST line is a compact constant-size summary with no per-query
+    # go on their OWN earlier line (and into the mirror on disk); the
+    # LAST line is a compact constant-size summary with no per-query
     # payload.  Nothing prints after it — Spark shutdown logs go to
-    # stderr.  tests/test_catalog.py::test_bench_headline_line_fits_tail
-    # pins the rendered final line under 1800 chars.
+    # stderr.  The per-query detail prints immediately before it so the
+    # driver's tail parser sees per-query seconds; detail+final are
+    # pinned inside the window by
+    # tests/test_catalog.py::test_bench_headline_line_fits_tail.
     if slopes:
         print(
             json.dumps(
@@ -622,54 +344,6 @@ def main() -> None:
                 }
             )
         )
-    if drift_vs_ref or not cal_uniform:
-        print(
-            json.dumps(
-                {
-                    "metric": "normalized_drift_vs_ref",
-                    "flag_ratio": REGRESSION_FLAG_RATIO,
-                    "calibration_uniform": cal_uniform,
-                    "drift": drift_vs_ref,
-                    "drift_raw": drift_raw_vs_ref,
-                    "regressed_candidates": regressed_candidates,
-                    "regressed_normalized": regressed_normalized,
-                    "raw_view_missing": sorted(set(raw_view_missing)),
-                }
-            )
-        )
-    # Reference-retake trigger (round 9, VERDICT r8 #2 — SCALE.md's own
-    # stated policy, now enforced where the data appears): a frozen-42
-    # uniform sweep whose probe window is at/below REF_RETAKE_PROBE and
-    # faster than the committed reference's is exactly the window the
-    # policy says to retake from.  Print the offer; the swap itself is
-    # scripts/retake_ref.py (validated, provenance-recording) so a
-    # bench run never silently moves its own goalposts.
-    ref_probe = ref.get("calibration", {}).get("mean_sec")
-    if (
-        headline is HEADLINE
-        and ref_comparable
-        and cal_uniform
-        and 0 < cal_mean <= REF_RETAKE_PROBE
-        and _usable(ref_probe)
-        and cal_mean < ref_probe
-    ):
-        print(
-            json.dumps(
-                {
-                    "metric": "reference_retake_available",
-                    "sweep_probe_mean": cal_mean,
-                    "ref_probe_mean": ref_probe,
-                    "action": "python scripts/retake_ref.py --from-series",
-                }
-            )
-        )
-    # Per-query detail goes LAST-BUT-ONE (round 12, VERDICT r11 #2): the
-    # driver keeps a 2000-char stdout tail and reads per-query seconds
-    # from this line; printed earlier (rounds 6-11) the two 42-entry
-    # drift dicts crowded it out of the tail and PERF per_query came back
-    # empty both rounds.  detail+final render ≤ ~1610 chars worst-case
-    # (4-decimal values), pinned under the window by
-    # tests/test_catalog.py::test_bench_headline_line_fits_tail.
     print(
         json.dumps(
             {
@@ -679,24 +353,19 @@ def main() -> None:
             }
         )
     )
-    final_line = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "n_queries": len(timings),
-            "sf": sf,
-            "calibration_sec": cal_mean,
-            "n_regressed_normalized": len(regressed_normalized),
-        }
-    )
+    summary = {
+        "metric": "headline_queries_total",
+        "value": total,
+        "unit": "sec",
+        "n_queries": len(timings),
+        "sf": sf,
+    }
     # Mirror the full record to disk so per-query numbers survive even if
-    # stdout is truncated.  Mirror-target policy (round 7, VERDICT r6
-    # item #3 / ADVICE r6): the committed BENCH_LOCAL.json is RESERVED
-    # for the 66-query full sweep (SPARK_GRAFT_BENCH_FULL=1); frozen-42 /
-    # driver / smoke runs write BENCH_HEADLINE.json instead, so a driver
-    # run can never clobber the committed full-sweep record.
-    # tests/test_catalog.py pins this policy.
+    # stdout is truncated.  Mirror-target policy (round 7): the committed
+    # BENCH_LOCAL.json is RESERVED for the 66-query full sweep
+    # (SPARK_GRAFT_BENCH_FULL=1); frozen-42 / driver / smoke runs write
+    # BENCH_HEADLINE.json instead, so a driver run can never clobber the
+    # committed full-sweep record.  tests/test_catalog.py pins this policy.
     mirror_name = (
         "BENCH_LOCAL.json" if headline is HEADLINE_FULL else "BENCH_HEADLINE.json"
     )
@@ -704,29 +373,10 @@ def main() -> None:
         with open(os.path.join(os.path.dirname(__file__), mirror_name), "w") as f:
             json.dump(
                 {
-                    "metric": "headline_queries_total",
-                    "value": total,
-                    "unit": "sec",
-                    "n_queries": len(timings),
-                    "sf": sf,
+                    **summary,
                     "headline_set": "full" if headline is HEADLINE_FULL else "frozen42",
-                    "calibration": {
-                        "probe": "range(1e7) sum codegen, min of 3",
-                        "start_sec": cal_start,
-                        "end_sec": cal_end,
-                        "mean_sec": cal_mean,
-                        "shuffle_probe": "range(2e6) groupBy(id%4096) count, min of 3",
-                        "shuffle_start_sec": shuf_start,
-                        "shuffle_end_sec": shuf_end,
-                    },
+                    "host": host_stamp(spark),
                     "queries": timings,
-                    "queries_normalized": normalized,
-                    "calibration_uniform": cal_uniform,
-                    "drift_vs_ref": drift_vs_ref,
-                    "drift_raw_vs_ref": drift_raw_vs_ref,
-                    "regressed_candidates": regressed_candidates,
-                    "regressed_normalized": regressed_normalized,
-                    "raw_view_missing": sorted(set(raw_view_missing)),
                     "slopes": slopes,
                     "flagged_ge20x": flagged,
                 },
@@ -736,34 +386,7 @@ def main() -> None:
             f.write("\n")
     except OSError:
         pass
-    # Committed round-over-round series (round 8, VERDICT r7 item #6):
-    # every sweep appends one compact line so normalized per-query
-    # comparisons r6→r7→r8→… can be diffed from committed artifacts
-    # alone, independent of the driver's 2000-char stdout tail capture.
-    try:
-        with open(
-            os.path.join(os.path.dirname(__file__), HISTORY_NAME), "a"
-        ) as f:
-            f.write(
-                json.dumps(
-                    {
-                        "ts": int(time.time()),
-                        "set": "full" if headline is HEADLINE_FULL else "frozen42",
-                        "sf": sf,
-                        "total_sec": total,
-                        "calibration_mean_sec": cal_mean,
-                        "calibration_uniform": cal_uniform,
-                        "queries": timings,
-                        "queries_normalized": normalized,
-                        "regressed_candidates": regressed_candidates,
-                        "regressed_normalized": regressed_normalized,
-                    }
-                )
-                + "\n"
-            )
-    except OSError:
-        pass
-    print(final_line)
+    print(json.dumps(summary))
     sys.stdout.flush()
     spark.stop()
 

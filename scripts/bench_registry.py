@@ -18,11 +18,10 @@ is recorded in flag_adjudication instead of failing the run.  Queries
 that error and queries whose time outgrew their output fail the run
 (exit 1 — the verify_all stage contract).
 
-Probe context (codegen + shuffle, sweep start/end) is recorded so a
-throttled window is visible inside the artifact, same as bench.py; raw
-seconds here are NOT normalized or drift-adjudicated — the only decision
-this artifact feeds is the slope flag, which is an intra-session ratio
-and therefore host-mode-invariant to first order.
+The record is stamped with the host that produced it, same as
+bench.py; the only decision this artifact feeds is the slope flag, which
+is an intra-session ratio and therefore host-mode-invariant to first
+order.
 
 Usage: python scripts/bench_registry.py            # all 411
        python scripts/bench_registry.py q21 q30    # substring subset
@@ -36,7 +35,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from bench import _calibration_probe, _shuffle_probe  # noqa: E402
+from bench import host_stamp  # noqa: E402
 from udacity_datalake_spark_spark.plans import QUERIES  # noqa: E402
 from udacity_datalake_spark_spark.session import get_session  # noqa: E402
 
@@ -75,7 +74,6 @@ def main() -> None:
     subs = sys.argv[1:]
     names = sorted(n for n in QUERIES if not subs or any(s in n for s in subs))
     spark = get_session(app_name="udacity-datalake-spark-bench-registry")
-    cal_start, shuf_start = _calibration_probe(spark), _shuffle_probe(spark)
 
     small: dict[str, float] = {}
     big: dict[str, float] = {}
@@ -103,7 +101,6 @@ def main() -> None:
         )
         sys.stdout.flush()
 
-    cal_end, shuf_end = _calibration_probe(spark), _shuffle_probe(spark)
     slopes = {
         n: round(big[n] / small[n], 2) if small[n] > 0 else 0.0 for n in big
     }
@@ -157,8 +154,7 @@ def main() -> None:
         "slopes": slopes,
         "big_secs": big,
         "small_secs": small,
-        "calibration": {"start": cal_start, "end": cal_end},
-        "shuffle_probe": {"start": shuf_start, "end": shuf_end},
+        "host": host_stamp(spark),
     }
     if not subs:
         with open(OUT, "w") as fh:

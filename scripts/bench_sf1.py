@@ -5,12 +5,10 @@ the second measured decade of the 100 TB scaling argument.
 
 Both tiers are timed in THIS run (same session, same machine window),
 so the slope numerator and denominator share any host-throttle state;
-the calibration probe (bench._calibration_probe) is recorded at sweep
-start/end to make a mid-sweep throttle window visible inside the
-artifact.
+the record is stamped with the host that produced it (bench.host_stamp).
 
 Output: BENCH_SF1.json at the repo root —
-  {queries_sf01, queries_sf1, slopes, flagged_ge20x, calibration, ...}
+  {queries_sf01, queries_sf1, slopes, flagged_ge20x, host, ...}
 A healthy query's slope on 10× data is ≲10-with-overhead; ≥20 is
 flagged (a window/LSH/pair term that is flat at sf0.1 but super-linear
 at sf1 is exactly what this tier exists to catch).
@@ -60,7 +58,6 @@ def main() -> None:
             ).save()
     spark.catalog.clearCache()
 
-    cal_start = bench._calibration_probe(spark)
     t_sf01: dict[str, float] = {}
     t_sf1: dict[str, float] = {}
     for name in bench.HEADLINE:
@@ -71,7 +68,6 @@ def main() -> None:
         slope = round(t_sf1[name] / t_sf01[name], 2) if t_sf01[name] > 0 else 0.0
         print(f"  {name}: sf0.1 {t_sf01[name]}s  sf1 {t_sf1[name]}s  slope {slope}")
         sys.stdout.flush()
-    cal_end = bench._calibration_probe(spark)
 
     slopes = {
         n: (round(t_sf1[n] / t_sf01[n], 2) if t_sf01[n] > 0 else 0.0) for n in t_sf1
@@ -85,11 +81,7 @@ def main() -> None:
         "repeats": REPEATS,
         "total_sf1_sec": round(sum(t_sf1.values()), 4),
         "total_sf01_sec": round(sum(t_sf01.values()), 4),
-        "calibration": {
-            "probe": "range(1e7) sum codegen, min of 3",
-            "start_sec": cal_start,
-            "end_sec": cal_end,
-        },
+        "host": bench.host_stamp(spark),
         "queries_sf01": t_sf01,
         "queries_sf1": t_sf1,
         "slopes": slopes,

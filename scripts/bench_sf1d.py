@@ -116,7 +116,6 @@ def run_skew_variant() -> None:
             "overwrite"
         ).save()
     spark.catalog.clearCache()
-    cal_start = bench._calibration_probe(spark)
     t_uni: dict[str, float] = {}
     t_skw: dict[str, float] = {}
     for name in GRAPH_TRIO:
@@ -125,7 +124,6 @@ def run_skew_variant() -> None:
         ratio = round(t_skw[name] / t_uni[name], 2) if t_uni[name] > 0 else 0.0
         print(f"  {name}: sf1d {t_uni[name]}s  sf1ds {t_skw[name]}s  ratio {ratio}")
         sys.stdout.flush()
-    cal_end = bench._calibration_probe(spark)
     ratios = {
         n: (round(t_skw[n] / t_uni[n], 2) if t_uni[n] > 0 else 0.0) for n in t_skw
     }
@@ -141,7 +139,7 @@ def run_skew_variant() -> None:
         "queries_sf1ds": t_skw,
         "skew_cost_ratio": ratios,
         "flagged": flagged,
-        "calibration": {"start_sec": cal_start, "end_sec": cal_end},
+        "host": bench.host_stamp(spark),
     }
     try:
         with open("/root/repo/BENCH_SF1D.json") as f:
@@ -200,7 +198,6 @@ def main() -> None:
         ).save()
     spark.catalog.clearCache()
 
-    cal_start = bench._calibration_probe(spark)
     t_sf01: dict[str, float] = {}
     t_sf1d: dict[str, float] = {}
     for name in DIM_BOUND:
@@ -209,7 +206,6 @@ def main() -> None:
         slope = round(t_sf1d[name] / t_sf01[name], 2) if t_sf01[name] > 0 else 0.0
         print(f"  {name}: sf0.1 {t_sf01[name]}s  sf1d {t_sf1d[name]}s  slope {slope}")
         sys.stdout.flush()
-    cal_end = bench._calibration_probe(spark)
 
     slopes = {
         n: (round(t_sf1d[n] / t_sf01[n], 2) if t_sf01[n] > 0 else 0.0) for n in t_sf1d
@@ -224,11 +220,7 @@ def main() -> None:
         "isomorphism_invariant_q212": iso,
         "total_sf1d_sec": round(sum(t_sf1d.values()), 4),
         "total_sf01_sec": round(sum(t_sf01.values()), 4),
-        "calibration": {
-            "probe": "range(1e7) sum codegen, min of 3",
-            "start_sec": cal_start,
-            "end_sec": cal_end,
-        },
+        "host": bench.host_stamp(spark),
         "queries_sf01": t_sf01,
         "queries_sf1d": t_sf1d,
         "slopes": slopes,

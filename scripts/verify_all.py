@@ -11,8 +11,8 @@ into the next):
                  CORRECTNESS_LOCAL.md; + sf1 sensitive subset when the
                  .localdata/sf1 fixture exists)
   3. bench     — frozen-42 headline sweep at sf0.1 (bench.py →
-                 BENCH_HEADLINE.json + bench_history.jsonl; applies the
-                 normalized-regression rule vs BENCH_REF.json)
+                 BENCH_HEADLINE.json); passes on exit 0 with a
+                 parseable final JSON line
 The slower tier scripts (bench_sf1.py, bench_sf1d.py, skew_bench.py)
 are opt-in via --tiers; they need the .localdata fixtures
 (scripts/make_sf1.py [--grow-dims]) and a verifiably idle host.
@@ -87,42 +87,6 @@ TIER_STAGES: list[tuple[str, list[str]]] = [
 ]
 
 
-def _pending_series_fold() -> int | None:
-    """How many committed uniform frozen-42 windows (at the reference's
-    scale factor) are NOT yet members of the series-median reference —
-    the fold retake_ref.py --from-series would absorb (round 10,
-    VERDICT r9 #6: the fold used to happen only when someone remembered
-    bench.py's availability line; this surfaces the pending state in
-    every verify_all telemetry record).  None when the reference is not
-    a series median or the history is unreadable."""
-    try:
-        if REPO not in sys.path:
-            sys.path.insert(0, REPO)
-        import bench
-
-        with open(os.path.join(REPO, bench.REF_NAME)) as f:
-            ref = json.load(f)
-        n_members = ref.get("calibration", {}).get("n_windows")
-        if not isinstance(n_members, int):
-            return None
-        sf = ref.get("sf")
-        with open(os.path.join(REPO, bench.HISTORY_NAME)) as f:
-            entries = [json.loads(ln) for ln in f if ln.strip()]
-        n_uniform = sum(
-            1
-            for e in entries
-            if e.get("set") == "frozen42"
-            and e.get("sf") == sf
-            and e.get("calibration_uniform")
-            and not e.get("ref_swap")
-            and e.get("queries")
-            and e.get("queries_normalized")
-        )
-        return max(0, n_uniform - n_members)
-    except Exception:
-        return None
-
-
 def main() -> None:
     skip = set()
     for i, a in enumerate(sys.argv):
@@ -146,30 +110,18 @@ def main() -> None:
             if line.strip():
                 last = line.strip()[:200]
                 break
-        # bench PASS additionally requires the pinned regression rule to
-        # come back clean: the final JSON line carries the count
+        # bench PASS additionally requires the driver-parsed final line
         if ok and name == "bench":
             try:
-                parsed = json.loads(last)
-                n_reg = parsed.get("n_regressed_normalized", 0)
-                if n_reg:
-                    ok = False
-                    last += f"  ({n_reg} queries regressed >1.3x normalized)"
+                json.loads(last)
             except ValueError:
-                pass
+                ok = False
         results.append((name, ok, wall, last))
         print(f"[{name}] {'PASS' if ok else 'FAIL'} {wall}s  {last}")
         if not ok:
             print(proc.stdout[-3000:])
             print(proc.stderr[-2000:], file=sys.stderr)
     all_ok = all(ok for _, ok, _, _ in results)
-    pending_fold = _pending_series_fold()
-    if pending_fold:
-        print(
-            f"series-median reference is {pending_fold} uniform window(s) "
-            "behind bench_history.jsonl — fold with: "
-            "python scripts/retake_ref.py --from-series"
-        )
     # Round-loop economics (round 9, VERDICT r8 #6): one committed line
     # per invocation with per-stage wall times, so tier-sweep cost (the
     # ~30-min registry sweep, sf1/sf1d) is tracked like suite time and
@@ -188,9 +140,6 @@ def main() -> None:
                         "quick": "--quick" in sys.argv,
                         "stage_wall_sec": {n: w for n, _, w, _ in results},
                         "failures": [n for n, ok, _, _ in results if not ok],
-                        # uniform windows not yet folded into the
-                        # series-median reference (VERDICT r9 #6)
-                        "pending_series_fold": pending_fold,
                     }
                 )
                 + "\n"

@@ -39,6 +39,23 @@ def test_s3a_conf_shape():
         assert "spark.hadoop.fs.s3a.access.key" not in anon
 
 
+def test_driver_memory_default_fits_host(monkeypatch):
+    """The session's default driver heap must fit in physical RAM: a
+    host without swap OOM-kills a JVM whose heap outgrows it, where a
+    heap that fits spills.  $SPARK_DRIVER_MEMORY still wins when set."""
+    import os
+
+    from udacity_datalake_spark_spark.session import driver_memory
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    value = driver_memory()
+    units = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+    heap = int(value[:-1]) * units[value[-1].lower()]
+    assert heap <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"), value
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert driver_memory() == "3g"
+
+
 def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
     from udacity_datalake_spark_spark.sources.readers import read_table
     from udacity_datalake_spark_spark.sources.writers import compact_parquet
@@ -381,8 +398,6 @@ def test_bench_headline_line_fits_tail():
             "unit": "sec",
             "n_queries": len(bench.HEADLINE),
             "sf": 0.1,
-            "calibration_sec": 9999.9999,
-            "n_regressed_normalized": 42,
         }
     )
     assert len(final_line) < 1800, (
@@ -444,135 +459,10 @@ def test_bench_mirror_target_policy():
         )
 
 
-def test_bench_regression_rule():
-    """Regression-rule pin (round-8 VERDICT #1, twice amended): a drift
-    candidate must exceed the 1.3x bar in BOTH the normalized view
-    (raw_sec / calibration probe) AND the raw view (raw_sec / reference
-    raw_sec) of the committed BENCH_REF.json.  The two amendments each
-    killed a measured whole-sweep phantom class on frozen code: the
-    codegen probe and the exchange path move independently (x1.5-1.7
-    mode splits), so a throttle window inflates raw-only and a
-    fast-probe window inflates normalized-only — a real regression
-    inflates both.  The reference itself must have been taken in a
-    clean uniform window (probe <= REF_PROBE_CEILING) and cover every
-    frozen-42 query, else the rule silently stops guarding."""
-    import json
-    import os
-
-    import bench
-
-    assert bench.REGRESSION_FLAG_RATIO == 1.3, (
-        "the normalized-regression flag bar is policy (SCALE.md r8) — "
-        "change it there first"
-    )
-    ref_path = os.path.join(os.path.dirname(bench.__file__), bench.REF_NAME)
-    assert os.path.exists(ref_path), (
-        "BENCH_REF.json missing — the normalized-regression rule has no "
-        "reference; re-run bench.py in a clean window and commit it"
-    )
-    with open(ref_path) as f:
-        ref = json.load(f)
-    probe = ref.get("calibration", {}).get("mean_sec")
-    assert probe is not None and probe <= bench.REF_PROBE_CEILING, (
-        f"BENCH_REF.json was taken with probe {probe}s > ceiling "
-        f"{bench.REF_PROBE_CEILING}s — a throttled reference normalizes "
-        "future regressions away; retake it on an idle host"
-    )
-    # the reference's own window must have been UNIFORM (normalization
-    # is meaningless across a mid-sweep throttle transition)
-    s, e = ref["calibration"]["start_sec"], ref["calibration"]["end_sec"]
-    assert max(s, e) / min(s, e) <= bench.CAL_UNIFORM_MAX_RATIO, (
-        f"BENCH_REF.json probe window non-uniform (start {s}s / end {e}s)"
-    )
-    ref_norm = ref.get("queries_normalized", {})
-    missing = [n for n in bench.HEADLINE if n not in ref_norm]
-    assert not missing, f"BENCH_REF.json lacks normalized refs for {missing}"
-    # the rule must act on the normalized dict AND the raw view
-    import inspect
-
-    src = inspect.getsource(bench.main)
-    assert "for n, v in normalized.items():" in src
-    assert "REGRESSION_FLAG_RATIO" in src
-    # dual-view candidate rule (second r8 amendment): the raw ratio vs
-    # BENCH_REF.queries_raw must gate the candidate alongside normalized
-    assert "raw_ratio" in src and "queries_raw" in src
-    # persistence rule (late r8): confirmed regressions must come from
-    # _confirm_regressed (two consecutive uniform windows, both views),
-    # not from the single-sweep candidate list
-    assert "_confirm_regressed(" in src
-    assert "_prior_uniform_normalized(" in src
-    assert "_prior_uniform_raw(" in src
-    # reference raw seconds must exist for the raw view
-    assert all(n in ref.get("queries_raw", {}) for n in bench.HEADLINE)
 
 
-def test_bench_regression_persistence_rule():
-    """A drift flag counts only when it reproduces across two
-    consecutive uniform windows: single-window min-of-5 swings measured
-    ×0.38-1.70 on byte-identical code (SCALE.md r8), so one window is
-    never evidence.  Candidates without a prior measurement stay
-    unconfirmed; a reference refresh between sweeps stays coherent
-    because prior drift is recomputed against the CURRENT reference."""
-    import bench
-
-    ref_norm = {"qA": 10.0, "qB": 10.0, "qC": 10.0}
-    # qA: prior window also >1.3x -> confirmed.  qB: prior window was
-    # fine -> candidate only.  qC: no prior measurement -> unconfirmed.
-    prior = {"qA": 14.0, "qB": 10.2}
-    out = bench._confirm_regressed(["qA", "qB", "qC"], prior, ref_norm)
-    assert out == ["qA"]
-    assert bench._confirm_regressed(["qA"], {}, ref_norm) == []
-    # dual-view persistence (second r8 amendment): the prior window must
-    # also show the RAW exceedance — qA's prior normalized is >1.3x but
-    # its prior raw is flat, so a probe-mode swing stays unconfirmed
-    assert (
-        bench._confirm_regressed(
-            ["qA"], prior, ref_norm,
-            prior_raw={"qA": 1.0}, ref_raw={"qA": 1.0},
-        )
-        == []
-    )
-    assert bench._confirm_regressed(
-        ["qA"], prior, ref_norm, prior_raw={"qA": 1.5}, ref_raw={"qA": 1.0}
-    ) == ["qA"]
-    # prior lookup: most recent committed uniform entry of the same
-    # sf/set must exist in bench_history.jsonl for the frozen-42 series
-    got = bench._prior_uniform_normalized(0.1, "frozen42")
-    assert got, "bench_history.jsonl has no uniform frozen42 sf0.1 entry"
-    assert all(isinstance(v, (int, float)) for v in got.values())
 
 
-def test_bench_history_series():
-    """Committed round-over-round series (round-8 VERDICT #6): bench runs
-    append to bench_history.jsonl so normalized per-query diffs r6→r7→r8
-    never depend on the driver's 2000-char stdout tail.  The committed
-    file must parse line-wise and contain the reconstructed r06/r07
-    frozen-42 entries."""
-    import json
-    import os
-
-    import bench
-
-    path = os.path.join(os.path.dirname(bench.__file__), bench.HISTORY_NAME)
-    assert os.path.exists(path), "bench_history.jsonl missing"
-    rounds = set()
-    with open(path) as f:
-        for line in f:
-            rec = json.loads(line)
-            if rec.get("ref_swap"):
-                # reference-swap audit record (round 9,
-                # scripts/retake_ref.py): carries the old/new probe and
-                # prior-entry drift recomputed against the new
-                # reference instead of sweep timings
-                assert "drift_recomputed_vs_new_ref" in rec
-                continue
-            assert "queries" in rec and "total_sec" in rec
-            rounds.add(rec.get("round"))
-    assert {"r06", "r07"} <= rounds, (
-        "seeded r06/r07 reconstruction entries missing from bench_history"
-    )
-    src = __import__("inspect").getsource(bench.main)
-    assert "HISTORY_NAME" in src, "bench.main no longer appends history"
 
 
 def test_sharded_runner_covers_all_test_modules():
@@ -638,99 +528,8 @@ def test_sharded_runner_covers_all_test_modules():
         )
 
 
-def test_bench_missing_raw_symmetry():
-    """ADVICE r8: the candidate stage fails OPEN when the reference
-    lacks a raw entry, so the confirm stage must not fail CLOSED on the
-    same gap — otherwise an old-format reference makes a real
-    regression unconfirmable with no trace.  Both stages now fail open
-    on a per-query missing raw datum and record the query in a
-    raw_view_missing list; and 0.0 timings are treated explicitly (a
-    zero can't form a ratio, but it must not silently disable the check
-    the way implicit truthiness did)."""
-    import bench
-
-    ref_norm = {"qA": 10.0, "qB": 10.0}
-    prior = {"qA": 14.0, "qB": 14.0}
-    # qA has raw data in both windows and is flat there -> dual view
-    # kills it; qB's raw datum is MISSING from the prior window -> fail
-    # open (confirmed on normalized persistence) and recorded
-    missing: list = []
-    out = bench._confirm_regressed(
-        ["qA", "qB"],
-        prior,
-        ref_norm,
-        prior_raw={"qA": 1.0},
-        ref_raw={"qA": 1.0, "qB": 1.0},
-        missing_raw_out=missing,
-    )
-    assert out == ["qB"]
-    assert missing == ["qB"]
-    # a 0.0 raw reference is unusable-for-a-ratio, handled as the
-    # explicit missing-data path (fail open + recorded), never a crash
-    # or a silent drop
-    missing2: list = []
-    out2 = bench._confirm_regressed(
-        ["qA"], prior, ref_norm, prior_raw={"qA": 1.5}, ref_raw={"qA": 0.0},
-        missing_raw_out=missing2,
-    )
-    assert out2 == ["qA"] and missing2 == ["qA"]
-    # explicit-guard helper: absent and zero both refuse, positives pass
-    assert bench._usable(1.0, 0.5)
-    assert not bench._usable(None)
-    assert not bench._usable(0.0)
-    # the main loop must surface the degradation in both stdout and the
-    # mirror artifact
-    import inspect
-
-    src = inspect.getsource(bench.main)
-    assert src.count('"raw_view_missing"') >= 2
 
 
-def test_bench_ref_retake_trigger():
-    """Round-9 VERDICT #2: bench.py enforces SCALE.md's own retake
-    policy — a frozen-42 uniform sweep with probe <= 0.08 that beats
-    the committed reference's probe prints reference_retake_available;
-    the swap itself only happens through scripts/retake_ref.py, which
-    validates window uniformity, the retake bar, full dual-view
-    coverage, and strictly-tighter probes before writing."""
-    import inspect
-    import os
-    import subprocess
-    import sys
-
-    import bench
-
-    assert bench.REF_RETAKE_PROBE == 0.08  # SCALE.md policy value
-    src = inspect.getsource(bench.main)
-    assert "reference_retake_available" in src
-    assert "REF_RETAKE_PROBE" in src
-    # the swap script must refuse a candidate that misses the bar; the
-    # committed BENCH_HEADLINE at this round's start (probe 0.0827) or
-    # any synthetic over-bar candidate exercises the refusal path
-    import json
-    import tempfile
-
-    bad = {
-        "headline_set": "frozen42",
-        "sf": 0.1,
-        "calibration": {"start_sec": 0.1, "end_sec": 0.1, "mean_sec": 0.1},
-        "queries": {},
-        "queries_normalized": {},
-    }
-    with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as f:
-        json.dump(bad, f)
-        path = f.name
-    try:
-        proc = subprocess.run(
-            [sys.executable, "scripts/retake_ref.py", path, "--dry-run"],
-            cwd=os.path.dirname(bench.__file__),
-            capture_output=True,
-            text=True,
-        )
-        assert proc.returncode == 1
-        assert "REFUSED" in proc.stderr
-    finally:
-        os.unlink(path)
 
 
 def test_solo_bench_validates_before_session():
@@ -756,34 +555,6 @@ def test_solo_bench_validates_before_session():
     assert "q999_not_a_query" in proc.stderr
 
 
-def test_bench_ref_is_series_median():
-    """Round-9 amendment pin: the committed BENCH_REF must be a
-    per-query dual-view MEDIAN over >=6 committed uniform windows —
-    a single-window reference carries its probe's mode bias wholesale
-    into the normalized view (measured 1.4-1.65x below the series
-    medians on ALL 42 queries, SCALE.md r9).  A future overwrite from
-    one window (retake_ref.py's candidate mode or a manual edit) must
-    trip this loudly."""
-    import json
-    import os
-
-    import bench
-
-    with open(os.path.join(os.path.dirname(bench.__file__), bench.REF_NAME)) as f:
-        ref = json.load(f)
-    cal = ref.get("calibration", {})
-    assert cal.get("n_windows", 0) >= 6, (
-        "BENCH_REF is not a series-median reference — rebuild with "
-        "scripts/retake_ref.py --from-series (SCALE.md r9 amendment)"
-    )
-    probes = cal.get("member_window_probes", [])
-    assert len(probes) == cal["n_windows"]
-    # the median must actually be the median of the recorded members
-    s = sorted(probes)
-    n = len(s)
-    want = s[n // 2] if n % 2 else round((s[n // 2 - 1] + s[n // 2]) / 2, 4)
-    assert abs(cal["mean_sec"] - want) < 1e-9
-    assert "--from-series" in ref.get("provenance", "")
 
 
 def test_bench_duration_scaled_repeats():

@@ -677,8 +677,8 @@ def test_minhash_bucket_cap_bounds_candidates_keeps_recall(spark):
 # (``_signature_agg`` / ``_band_keys``) and must stay byte-identical to the
 # MINHASH_SCHEME = 2 per-column formula they replaced: a persisted LSH index
 # stamped with scheme 2 would otherwise silently stop colliding with fresh
-# signatures.  Also pinned: what building q95 costs before anything
-# executes, the eager gate jobs it fires.
+# signatures.  Also pinned: what building the build-heavy headliners costs
+# before anything executes, the eager gate jobs they fire.
 
 LSH_QUERIES = [
     "q46_minhash_lsh",
@@ -687,11 +687,18 @@ LSH_QUERIES = [
     "q325_incremental_lsh_probe",
 ]
 
-#: Spark jobs fired while q95 is BUILT (before any action on the returned
-#: frame) on the 500-document test corpus: the collapse_exact auto-gate
-#: and connected_components' eager checkpoint and small-graph take.  A
-#: change here is a decision — a new eager action in the build path.
-Q95_JOBS_AT_BUILD = 14
+#: Spark jobs fired while each query is BUILT (before any action on the
+#: returned frame) at the test tier: for the dedup queries the
+#: collapse_exact auto-gate and connected_components' eager checkpoint and
+#: small-graph take, for the graph queries their dense-graph gates.  The
+#: counts are the same on 2 and 4 cores.  A change here is a decision — a
+#: new eager action in the build path.
+JOBS_AT_BUILD = {
+    "q95_dedup_corpus": 14,
+    "q195_curation_pipeline": 14,
+    "q212_triangle_count": 13,
+    "q319_link_prediction": 10,
+}
 
 
 def _tier(sf_dir: str, name: str) -> str:
@@ -795,20 +802,21 @@ def test_signature_is_one_aggregate_column(spark):
     assert {len(r["__sig"]) for r in sig.collect()} == {MINHASH_K}
 
 
-def test_q95_build_fires_pinned_job_count(spark, sf_dir):
-    """Build-cost guard: count the Spark jobs that building q95 fires
-    (nothing is executed on the returned frame) from the status store,
-    under a job group set around the build."""
+@pytest.mark.parametrize("name", sorted(JOBS_AT_BUILD))
+def test_build_fires_pinned_job_count(spark, sf_dir, name):
+    """Build-cost guard: count the Spark jobs that building the query
+    fires (nothing is executed on the returned frame) from the status
+    store, under a job group set around the build."""
     sc = spark.sparkContext
-    group = "test-q95-build-jobs"
-    sc.setJobGroup(group, "q95_dedup_corpus build")
+    group = f"test-{name}-build-jobs"
+    sc.setJobGroup(group, f"{name} build")
     try:
-        QUERIES["q95_dedup_corpus"](spark, sf_dir)
+        QUERIES[name](spark, sf_dir)
     finally:
         sc._jsc.clearJobGroup()
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         scratch.release()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == Q95_JOBS_AT_BUILD
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == JOBS_AT_BUILD[name]
 
 
 @pytest.mark.parametrize("tier", ["sf0.01", "sf0.1"])

@@ -563,6 +563,25 @@ _PLAN_SNAPSHOT_PATH = (
 _PLAN_SNAPSHOT = __import__("json").loads(_PLAN_SNAPSHOT_PATH.read_text())
 
 
+def _plan_over_budget(df, snap: dict) -> dict:
+    """Plan dimensions of ``df`` that exceed their snapshot budget, as
+    ``{dimension: (got, budget)}``: shuffle exchanges by partitioning
+    kind and nested-loop/cartesian join nodes."""
+    from udacity_datalake_spark_spark.explain import exchange_kinds
+
+    kinds = exchange_kinds(df)
+    joins = join_nodes(df)
+    got = {
+        "hash": kinds.count("hash"),
+        "single": kinds.count("single"),
+        "range": kinds.count("range"),
+        "other": kinds.count("other"),
+        "bnlj": joins.count("BroadcastNestedLoopJoin"),
+        "cartesian": joins.count("CartesianProduct"),
+    }
+    return {k: (got[k], snap[k]) for k in got if got[k] > snap[k]}
+
+
 def test_plan_snapshot_covers_registry():
     """Every registered query must have a plan-budget snapshot entry —
     a new wave regenerates tests/fixtures/plan_budgets.json
@@ -585,23 +604,29 @@ def test_registry_plan_budget_snapshot(spark, sf_dir, name):
     snap = _PLAN_SNAPSHOT.get(name)
     if snap is None:
         _pytest.skip("covered by test_plan_snapshot_covers_registry")
-    from udacity_datalake_spark_spark.explain import exchange_kinds
-
     df = QUERIES[name](spark, sf_dir)
-    kinds = exchange_kinds(df)
-    joins = join_nodes(df)
-    got = {
-        "hash": kinds.count("hash"),
-        "single": kinds.count("single"),
-        "range": kinds.count("range"),
-        "other": kinds.count("other"),
-        "bnlj": joins.count("BroadcastNestedLoopJoin"),
-        "cartesian": joins.count("CartesianProduct"),
-    }
-    over = {k: (got[k], snap[k]) for k in got if got[k] > snap[k]}
+    over = _plan_over_budget(df, snap)
     assert not over, (name, over)
     assert has_python_eval(df) == snap["python_eval"], name
     spark.catalog.clearCache()
+
+
+def test_plan_budget_catches_planted_exchange(spark, sf_dir):
+    """The plan-budget snapshot is the regression gate for plan shape, so
+    it must see a planted regression: with broadcast joins disabled,
+    q05's dim join becomes a sort-merge join with two more hash
+    exchanges, and the comparison names the grown dimension."""
+    name = "q05_inner_join"
+    snap = _PLAN_SNAPSHOT[name]
+    assert not _plan_over_budget(QUERIES[name](spark, sf_dir), snap)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        over = _plan_over_budget(QUERIES[name](spark, sf_dir), snap)
+    finally:
+        spark.conf.set(key, old)
+    assert over == {"hash": (2, 0)}, over
 
 
 

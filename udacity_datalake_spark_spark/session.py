@@ -17,6 +17,34 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MAX_DRIVER_MEMORY_MB = 64 * 1024
+
+
+def physical_memory_bytes() -> int | None:
+    """MemTotal from /proc/meminfo, or None where it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: $SPARK_DRIVER_MEMORY when set, else half
+    of physical RAM capped at 64g.  In local mode the driver heap holds
+    every executor too, so a heap larger than the host (no swap) gets
+    the process OOM-killed instead of spilling.  Spark's own 1g default
+    applies where the host's memory cannot be read."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    total = physical_memory_bytes()
+    if total is None:
+        return "1g"
+    return f"{min(total // 2**21, MAX_DRIVER_MEMORY_MB)}m"
 
 
 def get_session(
@@ -67,7 +95,7 @@ def get_session(
         # on every time predicate
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory", driver_memory())
         # shuffle files / broadcasts are reclaimed by the ContextCleaner
         # only after a driver GC notices the dead references; with a big
         # heap GC is rare, so long multi-query sessions accumulate
