@@ -6,7 +6,8 @@ detail, and LAST a compact summary
   {"metric": "headline_queries_total", "value": N, "unit": "sec",
    "n_queries": ..., "sf": ...}
 The full record, stamped with the host that produced it, is mirrored to
-BENCH_HEADLINE.json (BENCH_LOCAL.json for the full sweep).
+BENCH_HEADLINE.json (BENCH_LOCAL.json for the full sweep) by a run at the
+default sf0.1; a run at any other scale factor writes no mirror.
 
 Each query is executed to completion with the no-op sink (full pipeline
 runs — scan, shuffle, aggregate — without driver-side collect overhead
@@ -28,6 +29,11 @@ import time
 from udacity_datalake_spark_spark import scratch
 from udacity_datalake_spark_spark.plans import QUERIES
 from udacity_datalake_spark_spark.session import get_session, physical_memory_bytes
+
+REPO = os.path.dirname(os.path.abspath(__file__))
+#: scale factor of the default $SPARK_GRAFT_SF_DIR, the one the committed
+#: bench mirrors record
+MIRROR_SF = 0.1
 
 # Headline policy (round 6): the driver captures only a 2000-char stdout
 # TAIL and parses the LAST line.  Rounds 3 and 5 both broke parsing by
@@ -234,7 +240,7 @@ def host_stamp(spark) -> dict:
     try:
         sha = subprocess.run(
             ["git", "rev-parse", "HEAD"],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
+            cwd=REPO,
             capture_output=True,
             text=True,
         ).stdout.strip() or None
@@ -248,10 +254,29 @@ def host_stamp(spark) -> dict:
     }
 
 
+def scale_factor(sf_dir: str) -> float | None:
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    return float(m.group(1).rstrip(".")) if m else None
+
+
+def write_mirror(sf_dir: str, name: str, record: dict, root: str = REPO) -> bool:
+    """Mirror ``record`` to ``root/name`` for a run at ``MIRROR_SF`` only:
+    the committed mirrors are sf0.1 records, and a smoke run at sf0.01
+    must not replace them.  Returns whether it wrote."""
+    if scale_factor(sf_dir) != MIRROR_SF:
+        return False
+    try:
+        with open(os.path.join(root, name), "w") as f:
+            json.dump(record, f, indent=1)
+            f.write("\n")
+    except OSError:
+        return False
+    return True
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
+    sf = scale_factor(sf_dir)
 
     headline = (
         HEADLINE_FULL
@@ -369,23 +394,18 @@ def main() -> None:
     mirror_name = (
         "BENCH_LOCAL.json" if headline is HEADLINE_FULL else "BENCH_HEADLINE.json"
     )
-    try:
-        with open(os.path.join(os.path.dirname(__file__), mirror_name), "w") as f:
-            json.dump(
-                {
-                    **summary,
-                    "headline_set": "full" if headline is HEADLINE_FULL else "frozen42",
-                    "host": host_stamp(spark),
-                    "queries": timings,
-                    "slopes": slopes,
-                    "flagged_ge20x": flagged,
-                },
-                f,
-                indent=1,
-            )
-            f.write("\n")
-    except OSError:
-        pass
+    write_mirror(
+        sf_dir,
+        mirror_name,
+        {
+            **summary,
+            "headline_set": "full" if headline is HEADLINE_FULL else "frozen42",
+            "host": host_stamp(spark),
+            "queries": timings,
+            "slopes": slopes,
+            "flagged_ge20x": flagged,
+        },
+    )
     print(json.dumps(summary))
     sys.stdout.flush()
     spark.stop()

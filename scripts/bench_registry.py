@@ -30,10 +30,12 @@ Usage: python scripts/bench_registry.py            # all 411
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import host_stamp  # noqa: E402
 from udacity_datalake_spark_spark.plans import QUERIES  # noqa: E402
@@ -41,7 +43,7 @@ from udacity_datalake_spark_spark.session import get_session  # noqa: E402
 
 SMALL = "/root/testdata/sf0.01"
 BIG = "/root/testdata/sf0.1"
-OUT = "/root/repo/BENCH_REGISTRY.json"
+OUT = os.path.join(REPO, "BENCH_REGISTRY.json")
 
 # Digest-plan adjudication overrides (ADVICE r8): output-growth
 # adjudication counts RESULT rows, but a 1-row aggregate/digest plan

@@ -24,14 +24,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench
 from udacity_datalake_spark_spark.plans import QUERIES
 from udacity_datalake_spark_spark.session import get_session
 
 SF01_DIR = "/root/testdata/sf0.1"
-SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.localdata/sf1")
+SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO, ".localdata", "sf1"))
 REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
 
 
@@ -87,7 +88,7 @@ def main() -> None:
         "slopes": slopes,
         "flagged_ge20x": flagged,
     }
-    with open("/root/repo/BENCH_SF1.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH_SF1.json"), "w") as f:
         json.dump(record, f, indent=1)
         f.write("\n")
     print(

@@ -47,15 +47,17 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench
 from udacity_datalake_spark_spark.plans import QUERIES
 from udacity_datalake_spark_spark.session import get_session
 
 SF01_DIR = "/root/testdata/sf0.1"
-SF1D_DIR = os.environ.get("SPARK_GRAFT_SF1D_DIR", "/root/repo/.localdata/sf1d")
+SF1D_DIR = os.environ.get("SPARK_GRAFT_SF1D_DIR", os.path.join(REPO, ".localdata", "sf1d"))
 REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+OUT = os.path.join(REPO, "BENCH_SF1D.json")
 
 # The queries whose sf1 slope ~=1 was fixture semantics (SCALE.md
 # r7 "slopes ~1 are fixture semantics" list + VERDICT r7 item #2).
@@ -84,7 +86,7 @@ GRAPH_TRIO = [
     "q217_clustering_coefficient",
     "q319_link_prediction",
 ]
-SF1DS_DIR = os.environ.get("SPARK_GRAFT_SF1DS_DIR", "/root/repo/.localdata/sf1ds")
+SF1DS_DIR = os.environ.get("SPARK_GRAFT_SF1DS_DIR", os.path.join(REPO, ".localdata", "sf1ds"))
 SKEW_FLAG_RATIO = 4.0
 
 
@@ -142,12 +144,12 @@ def run_skew_variant() -> None:
         "host": bench.host_stamp(spark),
     }
     try:
-        with open("/root/repo/BENCH_SF1D.json") as f:
+        with open(OUT) as f:
             record = json.load(f)
     except (OSError, ValueError):
         record = {"metric": "sf1d_dim_grown_tier"}
     record["skew_variant"] = variant
-    with open("/root/repo/BENCH_SF1D.json", "w") as f:
+    with open(OUT, "w") as f:
         json.dump(record, f, indent=1)
         f.write("\n")
     print(
@@ -226,7 +228,7 @@ def main() -> None:
         "slopes": slopes,
         "flagged_ge20x": flagged,
     }
-    with open("/root/repo/BENCH_SF1D.json", "w") as f:
+    with open(OUT, "w") as f:
         json.dump(record, f, indent=1)
         f.write("\n")
     print(

@@ -40,14 +40,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as e
 from udacity_datalake_spark_spark import scratch
 from udacity_datalake_spark_spark.session import get_session
 from tests.oracle import assert_frames_match, run_oracle
 
-REPO = "/root/repo"
 #: per-query wall costs by tier from the last green full-volume sharded
 #: run — the measured input to LPT shard packing (VERDICT r10 #1)
 COSTS_PATH = os.path.join(REPO, "scripts", "driver_shard_costs.json")
@@ -62,7 +62,7 @@ SENSITIVE_PATTERNS = (
     "near_dup", "histogram", "binning", "moment",
 )
 
-SF1_DIR = "/root/repo/.localdata/sf1"
+SF1_DIR = os.path.join(REPO, ".localdata", "sf1")
 BIG_DIR = "/root/testdata/sf0.1"
 
 
@@ -119,7 +119,7 @@ def write_summary_md(
         f"| {n} | {s} | {big_statuses.get(n, '')} | {sf1_statuses.get(n, '')} |"
         for n, s in sorted(statuses.items())
     ]
-    with open("/root/repo/CORRECTNESS_LOCAL.md", "w") as fh:
+    with open(os.path.join(REPO, "CORRECTNESS_LOCAL.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print("wrote CORRECTNESS_LOCAL.md")
 

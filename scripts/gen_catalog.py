@@ -22,12 +22,13 @@ import pkgutil
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from udacity_datalake_spark_spark.plans import QUERIES  # noqa: E402
 
 PKG = "udacity_datalake_spark_spark"
-OUT = "/root/repo/docs/OPERATORS.md"
+OUT = os.path.join(REPO, "docs", "OPERATORS.md")
 
 
 def public_functions(subpkg: str):

@@ -2,7 +2,7 @@
 runs — round-5 VERDICT #5: thresholds, DECIMAL overflow headroom, rsd
 bands, and LSH occupancy only get interesting at volume, and the sandbox
 ships no sf1.  /root/testdata is read-only, so the fixture lands in
-/root/repo/.localdata/sf1 (gitignored; ~170 MB).
+.localdata/sf1 under the checkout (gitignored; ~170 MB).
 
 Construction: deterministic 10x keyed replication of sf0.1 (no RNG — a
 re-run is byte-identical), derived ONLY from the public fixture:
@@ -73,6 +73,8 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SRC = "/root/testdata/sf0.1"
 REPLICAS = 10
 DIM = 64
@@ -85,8 +87,8 @@ def main() -> None:
     if skew and not grow_dims:
         sys.exit("--skew requires --grow-dims (it skews the dim attachment)")
     argv = [a for a in argv if a not in ("--grow-dims", "--skew")]
-    default_out = "/root/repo/.localdata/" + (
-        "sf1ds" if skew else ("sf1d" if grow_dims else "sf1")
+    default_out = os.path.join(
+        REPO, ".localdata", "sf1ds" if skew else ("sf1d" if grow_dims else "sf1")
     )
     out = argv[0] if argv else default_out
     os.makedirs(out, exist_ok=True)

@@ -67,7 +67,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np
 
@@ -199,7 +200,7 @@ def run_sf1_tier(spark, tmp: str) -> None:
 
     from udacity_datalake_spark_spark.plans import QUERIES
 
-    sf1_dir = "/root/repo/.localdata/sf1"
+    sf1_dir = os.path.join(REPO, ".localdata", "sf1")
     if not os.path.isdir(sf1_dir):
         sys.exit("--sf1 needs .localdata/sf1 — run scripts/make_sf1.py first")
 

@@ -22,10 +22,12 @@ Usage: python scripts/snapshot_plans.py [sf_dir]   (rewrites the JSON)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from udacity_datalake_spark_spark.explain import (
     exchange_kinds,
@@ -35,7 +37,7 @@ from udacity_datalake_spark_spark.explain import (
 from udacity_datalake_spark_spark.plans import QUERIES
 from udacity_datalake_spark_spark.session import get_session
 
-OUT = "/root/repo/tests/fixtures/plan_budgets.json"
+OUT = os.path.join(REPO, "tests", "fixtures", "plan_budgets.json")
 
 
 def plan_shape(df) -> dict:

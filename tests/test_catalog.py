@@ -459,10 +459,42 @@ def test_bench_mirror_target_policy():
         )
 
 
+def test_bench_mirror_only_at_default_scale_factor(tmp_path):
+    """A smoke run at sf0.01 writes no mirror, so the committed sf0.1
+    headline record survives it; a run at sf0.1 writes its record."""
+    import json
+    import os
+
+    import bench
+
+    committed = os.path.join(bench.REPO, "BENCH_HEADLINE.json")
+    with open(committed, "rb") as f:
+        before = f.read()
+    record = {"metric": "headline_queries_total", "value": 1.0, "sf": 0.01}
+    assert not bench.write_mirror("/data/sf0.01", "BENCH_HEADLINE.json", record)
+    with open(committed, "rb") as f:
+        assert f.read() == before
+
+    assert bench.write_mirror("/data/sf0.1", "BENCH_HEADLINE.json", record, root=str(tmp_path))
+    with open(tmp_path / "BENCH_HEADLINE.json") as f:
+        assert json.load(f) == record
 
 
+def test_scripts_do_not_hard_code_the_checkout():
+    """Scripts find the checkout from their own location, so a script run
+    from another clone imports and writes that clone's files."""
+    import os
+    import re
 
-
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    scripts = os.path.join(repo, "scripts")
+    for name in sorted(os.listdir(scripts)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(scripts, name)) as f:
+            src = f.read()
+        assert repo not in src, name
+        assert not re.search(r"sys\.path\.insert\(\s*0\s*,\s*[\"']", src), name
 
 
 def test_sharded_runner_covers_all_test_modules():

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -209,3 +210,123 @@ def test_read_json_feed_infer_schema_compat(spark):
     assert inferred.count() == explicit.count()
     with pytest.raises(ValueError):
         read_json_feed(spark, f"{FIXTURES}/log_data.json")
+
+
+STAR_TABLES = ("songs", "artists", "users", "time", "songplays")
+
+
+def _read_tables(spark, out):
+    return {t: spark.read.parquet(f"{out}/{t}") for t in STAR_TABLES}
+
+
+def test_etl_rerun_equals_fresh_run(spark, tmp_path):
+    """Every table is replaced whole (reference etl.py:46-48,62,95,134,171
+    ``mode('overwrite')``): a run of seed 2 over seed 1's output equals a
+    fresh seed-2 run.  Under the session's dynamic partition overwrite the
+    rerun kept seed 1's songs and songplays partitions (142 vs 71 songs)."""
+    from perfbench import gen
+
+    from udacity_datalake_spark_spark.etl_cli import run_etl
+
+    for seed in (1, 2):
+        gen.make_feed(str(tmp_path / f"feed{seed}"), seed, 1)
+    rerun, fresh = str(tmp_path / "rerun"), str(tmp_path / "fresh")
+    run_etl(spark, str(tmp_path / "feed1"), rerun)
+    run_etl(spark, str(tmp_path / "feed2"), rerun)
+    run_etl(spark, str(tmp_path / "feed2"), fresh)
+
+    got, want = _read_tables(spark, rerun), _read_tables(spark, fresh)
+    for t in STAR_TABLES:
+        assert got[t].count() == want[t].count(), t
+        assert got[t].exceptAll(want[t]).count() == 0, t
+        assert want[t].exceptAll(got[t]).count() == 0, t
+    assert want["songs"].count() == gen.GOLDEN["songs"]
+
+
+def _listing_tasks(sc, group):
+    """Tasks of each file-listing job in ``group`` (Spark describes the
+    job it runs to list more than 32 paths as "Listing leaf files ...")."""
+    st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    tasks = {}
+    for job in st.getJobIdsForGroup(group):
+        desc = store.job(job).description()
+        if desc.isDefined() and desc.get().startswith("Listing leaf files"):
+            tasks[job] = sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(job).stageIds)
+    return tasks
+
+
+def test_run_etl_job_shape(spark, tmp_path, monkeypatch):
+    """Fixed costs of one ``run_etl`` over a 40-file song feed, one file
+    per directory, counted from the status store under a job group:
+
+    - the feed listing (more than 32 paths, so Spark lists them with a
+      job) runs at most one task per shuffle partition, not one per file;
+    - the songs/artists read-back takes the written schema and fires no
+      footer-inference job;
+    - each songs partition directory holds one parquet file."""
+    import json
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from udacity_datalake_spark_spark.etl_cli import run_etl
+
+    n_songs = 40
+    inp = tmp_path / "input"
+    for k in range(n_songs):
+        d = inp / "song_data" / "A" / f"B{k:02d}"
+        d.mkdir(parents=True)
+        song = {
+            "song_id": f"SO{k:016d}", "title": f"Song {k}", "artist_id": f"AR{k:016d}",
+            "artist_name": f"Artist {k}", "artist_location": "", "artist_latitude": None,
+            "artist_longitude": None, "year": 1990 + k % 7, "duration": 200.0 + k,
+            "num_songs": 1,
+        }
+        (d / f"TR{k:04d}.json").write_text(json.dumps(song) + "\n")
+    (inp / "log_data" / "2018").mkdir(parents=True)
+    shutil.copy(f"{FIXTURES}/log_data.json", inp / "log_data" / "2018" / "events.json")
+    out = str(tmp_path / "lake")
+
+    sc = spark.sparkContext
+    group, readback = f"etl-shape-{uuid.uuid4().hex}", f"etl-readback-{uuid.uuid4().hex}"
+    parquet_reads = []
+    read_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        parquet_reads.append(paths)
+        sc.setJobGroup(readback, "songs/artists read-back")
+        try:
+            return read_parquet(self, *paths, **options)
+        finally:
+            sc.setJobGroup(group, "run_etl")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    sc.setJobGroup(group, "run_etl")
+    try:
+        run_etl(spark, str(inp), out)
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    listing = _listing_tasks(sc, group)
+    assert len(listing) == 1 and max(listing.values()) <= n_shuffle, listing
+    assert [p[0].rsplit("/", 1)[-1] for p in parquet_reads] == ["songs", "artists"]
+    assert sc.statusTracker().getJobIdsForGroup(readback) == []
+
+    leaves = [(d, fs) for d, sub, fs in os.walk(f"{out}/songs") if not sub]
+    assert len(leaves) == n_songs
+    for d, fs in leaves:
+        assert len([f for f in fs if f.endswith(".parquet")]) == 1, d
+
+
+def test_readback_type_mismatch_fails_loudly(spark, song_data, log_data, tmp_path):
+    """The read-back takes the schema the songs/artists builders produce,
+    so an ``artists`` table whose ``artist_id`` was written as a long fails
+    the songplays build instead of flowing into songplays as a long."""
+    out = str(tmp_path / "lake")
+    process_song_data(spark, song_data, out)
+    bad = build_artists(song_data).withColumn("artist_id", F.lit(7).cast("long"))
+    bad.write.mode("overwrite").parquet(f"{out}/artists")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        process_log_data(spark, log_data, out)

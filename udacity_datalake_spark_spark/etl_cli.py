@@ -15,7 +15,11 @@ Differences by design:
 - songs/artists are re-read from the freshly-written parquet, as in the
   reference, and the reference's read-back shape (partition columns
   dropped, SURVEY.md §4.3.4) is reproduced by
-  ``sparkify.songs_readback_shape``.
+  ``sparkify.songs_readback_shape``; the read-back takes the schema the
+  tables were written with, so it runs no schema-inference job;
+- every table is replaced whole (static partition overwrite, the
+  reference's ``mode('overwrite')``), so rerunning into the same
+  ``--output_data`` equals a fresh run.
 
 Usage (spark-submit takes a script path, not a module flag)::
 

@@ -13,19 +13,26 @@ quirks the committed outputs prove (tests/test_sparkify.py):
 - OR-predicate artist join with left-outer misses → null artist_id
   (golden songplays: 3 of 4 null) — via the decomposed rewrite, not BNLJ;
 - weekday as full day name via date_format('EEEE'), not a Python UDF;
-- songs partitioned by (year, artist_id); time/songplays by (year, month).
+- songs partitioned by (year, artist_id); time/songplays by (year, month);
+- every table is replaced whole on each run (static partition overwrite,
+  the reference's ``mode('overwrite')``), so a rerun into the same output
+  equals a fresh run.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from udacity_datalake_spark_spark.functions.datetime import (
     epoch_ms_to_timestamp_compat,
     time_parts,
 )
 from udacity_datalake_spark_spark.operators.joins import left_join_or
+from udacity_datalake_spark_spark.schemas import SONG_DATA_SCHEMA
 from udacity_datalake_spark_spark.sources.writers import write_parquet
 
 
@@ -145,10 +152,34 @@ def songs_readback_shape(songs: DataFrame) -> DataFrame:
     return songs.select("song_id", "title", "duration")
 
 
+SONGS_PARTITIONS = ["year", "artist_id"]
+
+
+def _write(df: DataFrame, path: str, **kw) -> None:
+    """Replace the whole table, as the reference's ``mode('overwrite')``
+    does: the session's dynamic partition overwrite would keep every
+    partition the new data does not touch."""
+    write_parquet(df, path, partition_overwrite_mode="static", **kw)
+
+
+def read_written(
+    spark, like: DataFrame, path: str, partition_by: Sequence[str] = ()
+) -> DataFrame:
+    """Base-path read of a table written from a frame shaped like ``like``
+    with ``partitionBy(*partition_by)``.  The read takes the schema that
+    write produced (data columns, then partition columns), so it fires no
+    footer-inference job; a file whose types disagree still fails the
+    read."""
+    fields = {f.name: f for f in like.schema.fields}
+    data = [f for f in like.schema.fields if f.name not in partition_by]
+    schema = T.StructType(data + [fields[c] for c in partition_by])
+    return spark.read.schema(schema).parquet(path)
+
+
 def process_song_data(spark, song_data: DataFrame, output_dir: str) -> None:
     """Pipeline 1 (reference etl.py:23-62): songs + artists to parquet."""
-    write_parquet(build_songs(song_data), f"{output_dir}/songs", partition_by=["year", "artist_id"])
-    write_parquet(build_artists(song_data), f"{output_dir}/artists", target_files=1)
+    _write(build_songs(song_data), f"{output_dir}/songs", partition_by=SONGS_PARTITIONS)
+    _write(build_artists(song_data), f"{output_dir}/artists", target_files=1)
 
 
 def process_log_data(spark, log_data: DataFrame, output_dir: str) -> None:
@@ -156,15 +187,21 @@ def process_log_data(spark, log_data: DataFrame, output_dir: str) -> None:
 
     As in the reference, songs/artists are re-read from the parquet that
     ``process_song_data`` just wrote; the reference's read-back shape is
-    reproduced by ``songs_readback_shape``.
+    reproduced by ``songs_readback_shape``.  The read-back takes the
+    schema those tables were written with, derived from ``build_songs``
+    and ``build_artists`` over an empty song feed, so it fires no
+    schema-inference job.
     """
     events = filter_songplay_events(log_data)
-    write_parquet(build_users(events), f"{output_dir}/users", target_files=1)
+    _write(build_users(events), f"{output_dir}/users", target_files=1)
 
     time_table = build_time(events)
-    write_parquet(time_table, f"{output_dir}/time", partition_by=["year", "month"])
+    _write(time_table, f"{output_dir}/time", partition_by=["year", "month"])
 
-    songs = songs_readback_shape(spark.read.parquet(f"{output_dir}/songs"))
-    artists = spark.read.parquet(f"{output_dir}/artists")
+    feed = spark.createDataFrame([], SONG_DATA_SCHEMA)
+    songs = songs_readback_shape(
+        read_written(spark, build_songs(feed), f"{output_dir}/songs", SONGS_PARTITIONS)
+    )
+    artists = read_written(spark, build_artists(feed), f"{output_dir}/artists")
     songplays = build_songplays(events, songs, artists, time_table)
-    write_parquet(songplays, f"{output_dir}/songplays", partition_by=["year", "month"])
+    _write(songplays, f"{output_dir}/songplays", partition_by=["year", "month"])

@@ -67,6 +67,12 @@ def get_session(
       operators/) moves columnar batches, not pickled rows.
     - UTC session timezone: reproducible timestamp-part derivation
       (the reference's golden run leaked its machine TZ, SURVEY.md §4.3.5).
+    - Listing parallelism equal to the shuffle partitions: a read of more
+      than 32 paths (the ``song_data/*/*/*`` glob expands to one path per
+      file) is listed by a Spark job, one task per path up to 10 000 by
+      default.  Capped here, the 72-path benchmark feed is listed by 2
+      tasks at 2 slots instead of 72; the listing stays parallel, as a
+      cluster's object store needs.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -77,6 +83,7 @@ def get_session(
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(n_shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -7,6 +7,15 @@ partitioned write, which is why its golden ``users`` table is 85 files for
 an explicit repartition on the partition columns for partitioned writes
 (so each Hive partition is written by few tasks), or an AQE-coalesced
 repartition for flat writes.
+
+The partitioned repartition carries an explicit count,
+``spark.sql.shuffle.partitions`` (``by_partition``).  Hashing on the
+partition columns already sends each output directory to exactly one
+task, so the file count is fixed by the data; what the count decides
+is how many tasks share the writing.  Without it AQE coalesces a small
+shuffle into one partition, and a single task writes every directory,
+one after another, while the other slots idle.  AQE never coalesces a
+repartition whose count is given.
 """
 
 from __future__ import annotations
@@ -16,23 +25,38 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 
+def by_partition(df: DataFrame, partition_by: Sequence[str]) -> DataFrame:
+    """Hash-shuffle on the partition columns (reference X1, etl.py:169)
+    into ``spark.sql.shuffle.partitions`` tasks: each output directory is
+    written by exactly one task, and the directories are spread over
+    every slot (see the module docstring)."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *partition_by)
+
+
 def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str] | None = None,
     mode: str = "overwrite",
     target_files: int | None = None,
+    partition_overwrite_mode: str | None = None,
 ) -> None:
+    """Parquet sink.  ``partition_overwrite_mode`` sets this write's
+    ``partitionOverwriteMode``: ``"static"`` replaces the whole table, as
+    a plain ``mode('overwrite')`` does; ``None`` keeps the session default
+    (``dynamic``: only the partitions the data touches are replaced)."""
     if partition_by:
-        # Hash-shuffle on the partition columns (reference X1, etl.py:169)
-        # so each output directory is written by a bounded task set; the
-        # dynamic-partition writer then sorts within tasks for free.
-        df = df.repartition(*partition_by)
-        df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-    else:
-        if target_files is not None:
-            df = df.coalesce(target_files)
-        df.write.mode(mode).parquet(path)
+        # the dynamic-partition writer then sorts within tasks for free
+        df = by_partition(df, partition_by)
+    elif target_files is not None:
+        df = df.coalesce(target_files)
+    writer = df.write.mode(mode)
+    if partition_overwrite_mode is not None:
+        writer = writer.option("partitionOverwriteMode", partition_overwrite_mode)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
 
 
 def write_bucketed_table(
@@ -172,8 +196,7 @@ def write_orc(
     """ORC sink (built into Spark — no extra jars): same layout options
     as the parquet writer, for stacks standardized on ORC."""
     if partition_by:
-        df = df.repartition(*partition_by)
-        df.write.mode(mode).partitionBy(*partition_by).orc(path)
+        by_partition(df, partition_by).write.mode(mode).partitionBy(*partition_by).orc(path)
     else:
         df.write.mode(mode).orc(path)
 
@@ -205,10 +228,7 @@ def upsert_partitioned_parquet(
     parts = updates.select(*partition_by).distinct()
     affected = tgt.join(parts, list(partition_by), "left_semi")
     survivors = affected.join(updates.select(*keys).distinct(), list(keys), "left_anti")
-    staged = (
-        survivors.select(*cols)
-        .unionByName(updates.select(*cols))
-        .repartition(*partition_by)
-        .localCheckpoint(eager=True)
-    )
+    staged = by_partition(
+        survivors.select(*cols).unionByName(updates.select(*cols)), partition_by
+    ).localCheckpoint(eager=True)
     staged.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
