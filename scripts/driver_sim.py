@@ -2,40 +2,31 @@
 queries() entry at sf0.01 against its oracle_sql() twin on DuckDB —
 row-count + column-name + order-insensitive exact value compare.
 
-Usage: python scripts/driver_sim.py [--summary] [--full-volume]
-           [--shard i/n] [--json PATH] [sf_dir] [name_substring ...]
+Usage: python scripts/driver_sim.py [--summary] [--full-volume] [--sf1-full]
+           [sf_dir] [name_substring ...]
 (optional substrings restrict the run to matching query names — for
 quick re-verification of a touched operator family)
 
 --summary additionally writes CORRECTNESS_LOCAL.md at the repo root:
 one row per registry query (name → MATCH / rows-only / FAIL) plus the
 run date, so the judge can diff full-registry status without re-running
-the whole suite.
+the whole suite.  It also re-verifies the data-sensitive queries at
+sf0.1 (and at the local sf1 tier when .localdata/sf1 exists).
 
---shard i/n (round 10, VERDICT r9 #2): run shard i's slice of the
-registry so scripts/driver_sim_sharded.py can run the full-volume
-verification in N concurrent subprocesses instead of one serial
-2,100 s Spark session.  Since round 11 (VERDICT r10 #1) the slice is
-COST-PACKED: when scripts/driver_shard_costs.json (per-query walls by
-tier, written by driver_sim_sharded.py --update-costs from a green
-full-volume run) exists, shards are LPT bins over measured cost —
-round-robin-by-name left a 471-823 s straggler spread because one
-name-slice drew the heavy sf1-sensitive queries.  Falls back to
-round-robin when no cost table is committed.  --json PATH dumps the
-per-tier status maps + per-query costs as JSON for the orchestrator to
-merge; shards never write CORRECTNESS_LOCAL.md themselves.
-
---no-volume: skip the sf0.1/sf1 volume passes entirely (verify_all
---quick's sub-10-minute pre-commit loop — sf0.01 oracle parity only).
+--full-volume: the sf0.1 pass covers the WHOLE registry, not just the
+data-sensitive subset.  This is verify_all's driver stage: one serial
+Spark session.
 
 --sf1-full (round 11, VERDICT r10 #4): run the WHOLE registry at the
 sf1 tier, not just the data-sensitive subset.
+
+Every query runs under a scratch-leak sentinel: a query that leaves
+cached frames behind after scratch.release() fails the run.
 """
 
 from __future__ import annotations
 
 import datetime
-import json
 import os
 import sys
 import time
@@ -47,10 +38,6 @@ import __spark_entry__ as e
 from udacity_datalake_spark_spark import scratch
 from udacity_datalake_spark_spark.session import get_session
 from tests.oracle import assert_frames_match, run_oracle
-
-#: per-query wall costs by tier from the last green full-volume sharded
-#: run — the measured input to LPT shard packing (VERDICT r10 #1)
-COSTS_PATH = os.path.join(REPO, "scripts", "driver_shard_costs.json")
 
 # name patterns of the data-sensitive families re-verified at the
 # larger tiers (quantiles, sketches, sampling, LSH/ANN, dedup, moments)
@@ -127,98 +114,20 @@ def write_summary_md(
 def _usage_fail(msg: str) -> None:
     print(f"driver_sim: {msg}", file=sys.stderr)
     print(
-        "usage: driver_sim.py [--summary] [--full-volume] [--no-volume] "
-        "[--sf1-full] [--shard i/n] [--json PATH] [sf_dir] [name ...]",
+        "usage: driver_sim.py [--summary] [--full-volume] [--sf1-full] "
+        "[sf_dir] [name ...]",
         file=sys.stderr,
     )
     sys.exit(2)
 
 
-def _load_costs() -> dict[str, dict[str, float]]:
-    """Committed per-query wall costs by tier (scripts/driver_shard_costs
-    .json, written by driver_sim_sharded.py --update-costs from a green
-    full-volume run) — the measured input to cost-packed sharding."""
-    try:
-        with open(COSTS_PATH) as fh:
-            d = json.load(fh)
-        return {k: v for k, v in d.items() if isinstance(v, dict)}
-    except (OSError, ValueError):
-        return {}
-
-
-def shard_slice(
-    names: list[str],
-    i: int,
-    n: int,
-    full_volume: bool,
-    sf1_names: set[str],
-) -> set[str]:
-    """Which queries shard i of n owns.
-
-    Cost-packed when the committed cost table exists (round 11, VERDICT
-    r10 #1 — the 6-way round-robin-by-name split left a 471-823 s
-    straggler spread because ONE name-slice drew the heavy sf1-sensitive
-    queries): each query's cost is the SUM of the tier walls it will
-    actually run this invocation (sf0.01 always; sf0.1 when
-    full_volume; sf1 when it's in the sf1 set and the fixture exists),
-    LPT-packed (sort by descending cost, assign to the least-loaded
-    bin; all ties broken deterministically so every concurrent shard
-    process computes the identical assignment).  Queries missing from
-    the table get their tier's median cost.  Falls back to round-robin
-    over sorted names when no cost table is committed.
-    """
-    costs = _load_costs()
-    tiers = ["sf0.01"] + (["sf0.1"] if full_volume else [])
-    if not costs or not all(costs.get(t) for t in tiers):
-        return {nm for j, nm in enumerate(sorted(names)) if j % n == i}
-
-    def med(tier: str) -> float:
-        vals = sorted(costs.get(tier, {}).values())
-        return vals[len(vals) // 2] if vals else 1.0
-
-    sf1_live = os.path.isdir(SF1_DIR)
-    total: dict[str, float] = {}
-    for nm in names:
-        c = sum(costs.get(t, {}).get(nm, med(t)) for t in tiers)
-        if sf1_live and nm in sf1_names:
-            c += costs.get("sf1", {}).get(nm, med("sf1"))
-        total[nm] = c
-    loads = [0.0] * n
-    bins: list[set[str]] = [set() for _ in range(n)]
-    for nm in sorted(total, key=lambda x: (-total[x], x)):
-        b = min(range(n), key=lambda j: (loads[j], j))
-        loads[b] += total[nm]
-        bins[b].add(nm)
-    return bins[i]
-
-
 def main() -> None:
-    flags = {"--summary", "--full-volume", "--no-volume", "--sf1-full"}
+    flags = {"--summary", "--full-volume", "--sf1-full"}
     argv: list[str] = []
-    shard: tuple[int, int] | None = None
-    json_out: str | None = None
-    it = iter(sys.argv[1:])
-    for a in it:
-        if a in flags:
-            continue
-        if a == "--shard":
-            # guarded parse (ADVICE r10): a trailing flag or malformed
-            # i/n exits with a usage message, not a bare traceback
-            val = next(it, None)
-            if val is None or "/" not in val:
-                _usage_fail(f"--shard needs i/n, got {val!r}")
-            try:
-                si, sn = (int(x) for x in val.split("/", 1))
-            except ValueError:
-                _usage_fail(f"--shard needs integer i/n, got {val!r}")
-            if not 0 <= si < sn:
-                _usage_fail(f"--shard needs 0 <= i < n, got {val!r}")
-            shard = (si, sn)
-        elif a == "--json":
-            json_out = next(it, None)
-            if json_out is None:
-                _usage_fail("--json needs a path")
-        else:
+    for a in sys.argv[1:]:
+        if a.startswith("--") and a not in flags:
+            _usage_fail(f"unknown option {a}")
+        if a not in flags:
             argv.append(a)
     write_summary = "--summary" in sys.argv[1:]
     # --full-volume (round 8): run the WHOLE registry at sf0.1, not just
@@ -226,9 +135,7 @@ def main() -> None:
     # 50-query spot-check to full-surface volume verification.
     # --sf1-full (round 11, VERDICT r10 #4): extend the sf1 tier from
     # the data-sensitive subset to the whole registry — the once-per-
-    # round full-surface 10x pass (per-query walls land in the cost
-    # table either way, so the cost of the tier is measured, not
-    # guessed).
+    # round full-surface 10x pass.
     full_volume = "--full-volume" in sys.argv[1:]
     sf1_full = "--sf1-full" in sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
@@ -247,19 +154,12 @@ def main() -> None:
         n for n in sorted(qs) if any(p in n for p in SENSITIVE_PATTERNS)
     ]
     sf1_names = set(sorted(qs)) if sf1_full else set(sensitive_all)
-    if shard:
-        i, n = shard
-        mine = shard_slice(sorted(qs), i, n, full_volume, sf1_names)
-        qs = {k: v for k, v in qs.items() if k in mine}
     n_ok = n_rows_only = 0
     failures: list[str] = []
     statuses: dict[str, str] = {}
-    # per-query wall costs by tier (feeds the committed cost table the
-    # LPT shard packing reads — round 11, VERDICT r10 #1/#4)
-    costs: dict[str, dict[str, float]] = {"sf0.01": {}, "sf0.1": {}, "sf1": {}}
     # queries that left SQL-cache entries the scratch tracker didn't
-    # release — should be impossible now every package persist routes
-    # through scratch.spersist; the sentinel keeps the contract honest
+    # release: every package persist routes through scratch.spersist,
+    # so such a leak is a bug and fails the run
     scratch_leaks: list[str] = []
 
     def _release_and_check(name: str) -> None:
@@ -288,7 +188,6 @@ def main() -> None:
             statuses[name] = "FAIL"
             print(f"  {name}: FAIL — {ex}")
         finally:
-            costs["sf0.01"][name] = round(time.perf_counter() - t0, 2)
             # drop the query's tracked scratch frames (round 11: targeted
             # tracker release instead of session-wide clearCache) so a
             # 400-query session doesn't accumulate cache
@@ -309,13 +208,11 @@ def main() -> None:
     # scripts/make_sf1.py (10x keyed replication of sf0.1) — run the
     # same sensitive subset there when the fixture exists
     sf1_statuses: dict[str, str] = {}
-    no_volume = "--no-volume" in sys.argv[1:]
-    if (write_summary or json_out) and not subs and not no_volume and BIG_DIR != sf_dir:
+    if write_summary and not subs and BIG_DIR != sf_dir:
         big_list = sorted(qs) if full_volume else [
             n for n in sorted(qs) if n in sf1_names
         ]
         for name in big_list:
-            t0 = time.perf_counter()
             try:
                 pdf = qs[name](spark, BIG_DIR).toPandas()
                 if name in oracles:
@@ -328,7 +225,6 @@ def main() -> None:
                 big_failures.append(f"{name}@sf0.1")
                 print(f"  {name} @sf0.1: FAIL — {ex}")
             finally:
-                costs["sf0.1"][name] = round(time.perf_counter() - t0, 2)
                 _release_and_check(name)
         n_big_ok = sum(1 for s in big_statuses.values() if s == "MATCH")
         print(
@@ -342,7 +238,6 @@ def main() -> None:
         # query re-verifies at sf1 on each refresh — no MATCH* asterisks.
         if os.path.isdir(SF1_DIR):
             for name in sorted(n for n in qs if n in sf1_names):
-                t0 = time.perf_counter()
                 try:
                     pdf = qs[name](spark, SF1_DIR).toPandas()
                     if name in oracles:
@@ -365,7 +260,6 @@ def main() -> None:
                     big_failures.append(f"{name}@sf1")
                     print(f"  {name} @sf1: FAIL — {ex}")
                 finally:
-                    costs["sf1"][name] = round(time.perf_counter() - t0, 2)
                     _release_and_check(name)
             n1 = sum(1 for s in sf1_statuses.values() if s == "MATCH")
             print(
@@ -375,26 +269,7 @@ def main() -> None:
 
     if scratch_leaks:
         print(f"scratch leaks ({len(scratch_leaks)}): {scratch_leaks}")
-        if os.environ.get("SPARK_GRAFT_STRICT_SCRATCH", "0") == "1":
-            failures.extend(f"{n}@scratch-leak" for n in scratch_leaks)
-    if json_out:
-        with open(json_out, "w") as fh:
-            json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "full_volume": full_volume,
-                    "sf1_full": sf1_full,
-                    "shard": f"{shard[0]}/{shard[1]}" if shard else None,
-                    "statuses": statuses,
-                    "big_statuses": big_statuses,
-                    "sf1_statuses": sf1_statuses,
-                    "failures": failures,
-                    "big_failures": big_failures,
-                    "costs": costs,
-                    "scratch_leaks": scratch_leaks,
-                },
-                fh,
-            )
+        failures.extend(f"{n}@scratch-leak" for n in scratch_leaks)
     if write_summary:
         write_summary_md(
             statuses, big_statuses, sf1_statuses, sf_dir, full_volume,

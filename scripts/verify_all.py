@@ -4,12 +4,11 @@ per stage.  Exit 0 iff every stage passes.
 
 Stages (each a subprocess, so one stage's Spark session never bleeds
 into the next):
-  1. suite     — sharded pytest (scripts/run_tests_sharded.py; records
-                 wall time in SUITE_TIME.jsonl)
-  2. driver    — full-registry correctness sim at sf0.01 AND sf0.1
-                 (scripts/driver_sim.py --summary --full-volume →
-                 CORRECTNESS_LOCAL.md; + sf1 sensitive subset when the
-                 .localdata/sf1 fixture exists)
+  1. suite     — the Tier-1 pytest run: one serial session over tests/
+  2. driver    — full-registry correctness sim at sf0.01 AND sf0.1 in
+                 one serial session (scripts/driver_sim.py --summary
+                 --full-volume → CORRECTNESS_LOCAL.md; + sf1 sensitive
+                 subset when the .localdata/sf1 fixture exists)
   3. bench     — frozen-42 headline sweep at sf0.1 (bench.py →
                  BENCH_HEADLINE.json); passes on exit 0 with a
                  parseable final JSON line
@@ -17,11 +16,11 @@ The slower tier scripts (bench_sf1.py, bench_sf1d.py, skew_bench.py)
 are opt-in via --tiers; they need the .localdata fixtures
 (scripts/make_sf1.py [--grow-dims]) and a verifiably idle host.
 
---quick (round 10, VERDICT r9 #7): the pre-commit loop (~9 min) —
-sharded suite (which already contains the full 411-query oracle-parity
-sweep) + an __spark_entry__ contract smoke (entry() and one registered
-query per operator family through the driver comparator).  Full
-verify_all remains the round's evidence bar.
+--quick: the pre-commit loop — the suite (which already contains the
+full 411-query oracle-parity sweep) + an __spark_entry__ contract smoke
+(entry() and one registered query per operator family through the
+driver comparator).  Full verify_all remains the round's evidence bar.
+Per-stage wall times land in PROGRESS.jsonl.
 
 Usage: python scripts/verify_all.py [--skip suite,driver,bench]
            [--tiers] [--quick]
@@ -37,36 +36,30 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: the Tier-1 invocation
+SUITE = [
+    sys.executable, "-m", "pytest", "tests/", "-q",
+    "--continue-on-collection-errors", "-p", "no:cacheprovider",
+]
+
 STAGES: list[tuple[str, list[str]]] = [
-    ("suite", [sys.executable, "scripts/run_tests_sharded.py"]),
+    ("suite", SUITE),
     # --full-volume (round 8): the driver stage verifies the WHOLE
     # registry at sf0.1 too, not just the data-sensitive subset — its
     # first run caught q374's long-sum overflow and q368's oracle
-    # spill, both invisible at sf0.01.  Sharded since round 10 (VERDICT
-    # r9 #2): the serial single-session form cost 2,128 s of the
-    # 3,153 s repro; 4 subprocess shards (same isolation audit as the
-    # test runner) cut it ~3x with an identical merged
-    # CORRECTNESS_LOCAL.md.
-    # 6 shards: the 4-way run's 854-1049 s spread is per-slice query-cost
-    # imbalance (the sim is scheduling-latency-bound, not CPU-bound, so
-    # finer slices smooth stragglers and mild thread oversubscription is
-    # free)
-    # --update-costs (round 11, VERDICT r10 #1): every complete green
-    # full-volume run refreshes the measured per-query cost table that
-    # LPT shard packing reads, so the packing tracks plan changes
-    # automatically instead of drifting stale.
-    ("driver", [sys.executable, "scripts/driver_sim_sharded.py", "--full-volume", "--workers", "6", "--update-costs"]),
+    # spill, both invisible at sf0.01.
+    ("driver", [sys.executable, "scripts/driver_sim.py", "--summary", "--full-volume"]),
     ("bench", [sys.executable, "bench.py"]),
 ]
 # The quick driver stage is an __spark_entry__ CONTRACT smoke (entry()
 # plus one registered query per operator family), not a second full
 # parity sweep: the suite stage already executes all 411 oracle-parity
 # checks (tests/test_oracle_parity.py), so a full driver_sim pass in
-# quick mode re-verified the same queries through a second comparator
-# for +7 minutes (measured 418.7 s sharded).  Full verify_all keeps the
-# full-volume sharded sim as the round's evidence bar.
+# quick mode would re-verify the same queries through a second
+# comparator.  Full verify_all keeps the full-volume sim as the round's
+# evidence bar.
 QUICK_STAGES: list[tuple[str, list[str]]] = [
-    ("suite", [sys.executable, "scripts/run_tests_sharded.py"]),
+    ("suite", SUITE),
     (
         "driver_quick",
         [

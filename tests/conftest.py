@@ -9,54 +9,6 @@ from udacity_datalake_spark_spark.session import get_session
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
-def pytest_collection_modifyitems(config, items):
-    """Generic round-robin collection shard (round 10, VERDICT r9 #1).
-    SPARK_GRAFT_FILE_SHARD="i/n" keeps every n-th collected item —
-    scripts/run_tests_sharded.py uses it to split a single expensive
-    module (test_plans.py: 515 plan-budget tests, ~290 s clean — the
-    measured whale behind the old operators worker's 2.9x spread)
-    across concurrent pytest processes, the same way
-    SPARK_GRAFT_PARITY_SHARD splits the oracle-parity sweep.
-    SPARK_GRAFT_FILE_SHARD_MODULES (comma list of module basenames)
-    scopes the split to those modules only, so a worker can run "half
-    of test_plans.py plus ALL of test_streaming.py" in one pytest
-    invocation.  Assignment hashes the nodeid (crc32 % n) rather than
-    round-robin over the collection index: per-item cost correlates
-    with collection ORDER (measured on test_plans' 411-param
-    plan-budget sweep: the index-alternating halves came out 320 s vs
-    107 s — 3x lopsided), and a hash is also stable under test
-    insertion, where an index shift would silently reshuffle every
-    later item between shards.  SPARK_GRAFT_FILE_SHARD_SALT (optional)
-    is prepended to the nodeid before hashing: even-count hash halves
-    can still be COST-lopsided (a handful of parametrized cases
-    dominate — the unsalted halves measured 240 s vs 145 s), so the
-    runner commits the salt a measured per-test cost table showed
-    balances the halves (scripts/balance_file_shard.py).  Unset (every
-    direct `pytest tests/` run), this is a no-op and all tests run."""
-    shard = os.environ.get("SPARK_GRAFT_FILE_SHARD")
-    if not shard:
-        return
-    import zlib
-
-    i, n = (int(x) for x in shard.split("/"))
-    salt = os.environ.get("SPARK_GRAFT_FILE_SHARD_SALT", "")
-    modset = {
-        m.strip()
-        for m in os.environ.get("SPARK_GRAFT_FILE_SHARD_MODULES", "").split(",")
-        if m.strip()
-    }
-    keep, drop = [], []
-    for it in items:
-        fname = os.path.basename(str(it.fspath))
-        if modset and fname not in modset:
-            keep.append(it)
-            continue
-        h = zlib.crc32((salt + it.nodeid).encode())
-        (keep if h % n == i else drop).append(it)
-    items[:] = keep
-    config.hook.pytest_deselected(items=drop)
-
-
 @pytest.fixture(scope="session")
 def spark():
     spark = get_session(app_name="udacity-datalake-spark-tests")

@@ -3,8 +3,6 @@ column names + order-insensitive exact value equality."""
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 import duckdb
@@ -14,14 +12,6 @@ from udacity_datalake_spark_spark.schemas import TABLE_NAMES
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
-    # SPARK_GRAFT_ORACLE_THREADS caps DuckDB's thread pool (defaults to
-    # every core): N concurrent driver_sim shards each running a
-    # 32-thread oracle oversubscribe the host ~6x during the sf1-heavy
-    # queries — the sharded orchestrator sets this to the per-shard cpu
-    # budget (round 11, VERDICT r10 #1)
-    n = os.environ.get("SPARK_GRAFT_ORACLE_THREADS")
-    if n:
-        con.sql(f"SET threads TO {int(n)}")
     for t in TABLE_NAMES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con.sql(sql).df()

@@ -56,6 +56,20 @@ def test_driver_memory_default_fits_host(monkeypatch):
     assert driver_memory() == "3g"
 
 
+def test_core_count_default_fits_host(monkeypatch):
+    """With $SPARK_GRAFT_CPUS unset the engine sizes itself to the CPUs
+    the process may run on, not to a fixed core count; when set, the
+    variable wins."""
+    import os
+
+    from udacity_datalake_spark_spark.session import cpu_count
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert cpu_count() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert cpu_count() == 3
+
+
 def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
     from udacity_datalake_spark_spark.sources.readers import read_table
     from udacity_datalake_spark_spark.sources.writers import compact_parquet
@@ -354,11 +368,14 @@ def test_readme_query_range_matches_registry():
     """Doc-drift guard (round-5 VERDICT #8): README's stated query range
     must match the registry — a new wave that forgets the doc update
     fails here with the expected range named."""
+    import os
     import re
 
     from udacity_datalake_spark_spark.plans import QUERIES
 
-    text = open("/root/repo/README.md").read()
+    readme = os.path.join(os.path.dirname(__file__), "..", "README.md")
+    with open(readme) as f:
+        text = f.read()
     m = re.search(r"q0?1[–-]q(\d+)", text)
     assert m, "README.md no longer states the qNN–qNN registry range"
     last = max(int(re.match(r"q(\d+)_", n).group(1)) for n in QUERIES)
@@ -481,87 +498,50 @@ def test_bench_mirror_only_at_default_scale_factor(tmp_path):
 
 
 def test_scripts_do_not_hard_code_the_checkout():
-    """Scripts find the checkout from their own location, so a script run
-    from another clone imports and writes that clone's files."""
+    """Scripts, tests and top-level modules find the checkout from their
+    own location, so code run from another clone imports and writes
+    that clone's files."""
+    import glob
     import os
     import re
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    scripts = os.path.join(repo, "scripts")
-    for name in sorted(os.listdir(scripts)):
-        if not name.endswith(".py"):
-            continue
-        with open(os.path.join(scripts, name)) as f:
+    paths = sorted(
+        glob.glob(os.path.join(repo, "scripts", "*.py"))
+        + glob.glob(os.path.join(repo, "tests", "*.py"))
+        + glob.glob(os.path.join(repo, "*.py"))
+    )
+    assert paths
+    for path in paths:
+        name = os.path.relpath(path, repo)
+        with open(path) as f:
             src = f.read()
         assert repo not in src, name
         assert not re.search(r"sys\.path\.insert\(\s*0\s*,\s*[\"']", src), name
 
 
-def test_sharded_runner_covers_all_test_modules():
-    """The sharded runner (round-8 VERDICT #4, repacked round 10 by
-    measured module cost) must not silently drop a test: every
-    tests/test_*.py file appears in exactly one shard — UNLESS it is
-    split round-robin across workers, in which case it appears once per
-    split shard and those shards' indices must partition 0..n-1 over a
-    single n (true for the parity sweep via SPARK_GRAFT_PARITY_SHARD
-    and for any module named in SPARK_GRAFT_FILE_SHARD_MODULES via the
-    conftest collection hook)."""
-    import glob
+def test_verify_all_stages_name_existing_scripts():
+    """Every script a verify_all stage runs exists, so a deleted script
+    fails here rather than only when someone runs verify_all."""
     import importlib.util
     import os
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "run_tests_sharded",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "run_tests_sharded.py"),
+        "verify_all", os.path.join(repo, "scripts", "verify_all.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-
-    covered: list[str] = []
-    # module basename -> list of "i/n" shard specs that split it
-    splits: dict[str, list[str]] = {}
-    for name, targets, env in mod.SHARDS:
-        basenames = [os.path.basename(t) for t in targets]
-        covered.extend(basenames)
-        if "SPARK_GRAFT_PARITY_SHARD" in env:
-            splits.setdefault("test_oracle_parity.py", []).append(
-                env["SPARK_GRAFT_PARITY_SHARD"]
-            )
-        if "SPARK_GRAFT_FILE_SHARD" in env:
-            mods = env.get("SPARK_GRAFT_FILE_SHARD_MODULES", "")
-            shard_mods = [m.strip() for m in mods.split(",") if m.strip()]
-            assert shard_mods, (
-                f"shard {name}: FILE_SHARD without FILE_SHARD_MODULES would "
-                "round-robin EVERY co-resident module and drop tests"
-            )
-            for m in shard_mods:
-                assert m in basenames, (
-                    f"shard {name}: {m} in FILE_SHARD_MODULES but not in targets"
-                )
-                splits.setdefault(m, []).append(env["SPARK_GRAFT_FILE_SHARD"])
-    repo_tests = sorted(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(os.path.dirname(__file__), "test_*.py"))
-    )
-    for t in repo_tests:
-        expected = len(splits[t]) if t in splits else 1
-        assert covered.count(t) == expected, (
-            f"{t} appears {covered.count(t)}x in the shard plan "
-            f"(expected {expected}) — update scripts/run_tests_sharded.py"
-        )
-    # every split module's shards must partition: i/n for i in 0..n-1
-    for m, specs in splits.items():
-        ns = {s.split("/")[1] for s in specs}
-        assert len(ns) == 1, (m, specs)
-        n = int(next(iter(ns)))
-        assert sorted(int(s.split("/")[0]) for s in specs) == list(range(n)), (
-            m,
-            specs,
-        )
-
-
-
-
+    stages = mod.STAGES + mod.QUICK_STAGES + mod.TIER_STAGES
+    named = [
+        arg
+        for _, cmd in stages
+        for arg in cmd
+        if arg.startswith("scripts/") and arg.endswith(".py")
+    ]
+    assert len(named) >= 5, named
+    missing = [p for p in named if not os.path.isfile(os.path.join(repo, p))]
+    assert not missing, missing
 
 
 def test_solo_bench_validates_before_session():
@@ -614,54 +594,3 @@ def test_bench_duration_scaled_repeats():
     assert simulate(0.3, 5) == 7   # stops once 2s of work accumulated
     assert simulate(0.45, 5) == 5  # 5 x 0.45 = 2.25s >= 2s at base
     assert simulate(0.1, 1) == 1   # explicit fast mode: no extension
-
-
-def test_file_shard_hook_partitions_collection():
-    """The conftest SPARK_GRAFT_FILE_SHARD hook (round 10): i/n shards
-    must PARTITION a module's collected tests (no loss, no overlap by
-    count), and SPARK_GRAFT_FILE_SHARD_MODULES must scope the split so
-    co-resident modules are kept whole.  Exercised via pytest
-    --collect-only subprocesses (no Spark session — collection only)."""
-    import os
-    import re
-    import subprocess
-    import sys
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-
-    def collected(extra_env: dict, targets: list[str]) -> int:
-        env = {**os.environ, **extra_env}
-        # scrub inherited shard vars (this test itself runs INSIDE a
-        # sharded worker whose env would otherwise leak into the
-        # subprocess and distort the partition arithmetic)
-        for k in ("SPARK_GRAFT_FILE_SHARD", "SPARK_GRAFT_FILE_SHARD_MODULES"):
-            if k not in extra_env:
-                env.pop(k, None)
-        p = subprocess.run(
-            [sys.executable, "-m", "pytest", *targets, "--collect-only", "-q",
-             "-p", "no:cacheprovider"],
-            cwd=repo, env=env, capture_output=True, text=True,
-        )
-        m = re.search(r"(\d+)(?:/\d+)? tests? collected", p.stdout)
-        assert m, p.stdout[-800:]
-        return int(m.group(1))
-
-    # partition check on the real split target (411-param sweep —
-    # large enough that the hash halves must both be substantial)
-    tgt = ["tests/test_plans.py"]
-    total = collected({}, tgt)
-    n0 = collected({"SPARK_GRAFT_FILE_SHARD": "0/2"}, tgt)
-    n1 = collected({"SPARK_GRAFT_FILE_SHARD": "1/2"}, tgt)
-    assert n0 + n1 == total, (n0, n1, total)
-    assert min(n0, n1) >= total * 0.35, (n0, n1, total)
-    # scoped: a MODULES list that names a DIFFERENT module keeps
-    # everything (the hook must not shard co-resident modules)
-    small = ["tests/test_wave63_ops.py"]
-    n_scoped = collected(
-        {
-            "SPARK_GRAFT_FILE_SHARD": "0/2",
-            "SPARK_GRAFT_FILE_SHARD_MODULES": "test_plans.py",
-        },
-        small,
-    )
-    assert n_scoped == collected({}, small)

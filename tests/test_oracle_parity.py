@@ -3,8 +3,6 @@ oracle at the test scale factor — exact, order-insensitive."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from udacity_datalake_spark_spark.plans import ORACLE_SQL, QUERIES
@@ -15,19 +13,8 @@ from tests.oracle import assert_frames_match, run_oracle
 # else must match bit-exactly (decimal-exact aggregation design).
 RTOL_OVERRIDES: dict[str, float] = {}
 
-# Shard hook for scripts/run_tests_sharded.py (round-8 VERDICT #4): the
-# 411-query parity sweep dominates suite wall-clock, so the sharded
-# runner splits it across workers with SPARK_GRAFT_PARITY_SHARD="i/n"
-# (round-robin over the sorted name list — every query runs in exactly
-# one shard; a plain `pytest tests/` run still executes all of them).
-_PARITY_NAMES = sorted(QUERIES)
-_shard = os.environ.get("SPARK_GRAFT_PARITY_SHARD")
-if _shard:
-    _i, _n = (int(x) for x in _shard.split("/"))
-    _PARITY_NAMES = [q for k, q in enumerate(_PARITY_NAMES) if k % _n == _i]
 
-
-@pytest.mark.parametrize("name", _PARITY_NAMES)
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, name):
     try:
         df = QUERIES[name](spark, sf_dir)

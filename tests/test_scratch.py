@@ -1,12 +1,8 @@
 """Round-11 contract tests: the package-wide scoped-persist tracker
-(udacity_datalake_spark_spark.scratch — VERDICT r10 #2), the lazy
-cosine_near_dup_pairs auto strategy pick (VERDICT r10 #3), and the
-cost-packed driver_sim shard assignment (VERDICT r10 #1)."""
+(udacity_datalake_spark_spark.scratch — VERDICT r10 #2) and the lazy
+cosine_near_dup_pairs auto strategy pick (VERDICT r10 #3)."""
 
 from __future__ import annotations
-
-import os
-import sys
 
 from pyspark.sql import functions as F
 
@@ -123,50 +119,3 @@ def test_q56_builder_strategy_pick_runs_no_count_job(spark, sf_dir):
     assert seen == []  # the pick consumed approx_rows, not a count() job
     scratch.release()
     spark.catalog.clearCache()
-
-
-def test_shard_slice_partitions_registry():
-    """LPT cost packing must stay a PARTITION: every query lands in
-    exactly one shard, for both the cost-table and round-robin paths."""
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    import driver_sim as ds
-
-    names = sorted(QUERIES)
-    sf1_names = {n for n in names if any(p in n for p in ds.SENSITIVE_PATTERNS)}
-    for n_shards in (4, 6):
-        slices = [
-            ds.shard_slice(names, i, n_shards, True, sf1_names)
-            for i in range(n_shards)
-        ]
-        union = set().union(*slices)
-        assert union == set(names)
-        assert sum(len(s) for s in slices) == len(names)  # disjoint
-
-
-def test_shard_slice_cost_packing_balances(tmp_path, monkeypatch):
-    """With a committed cost table, LPT packing's max-bin/mean-bin load
-    must beat round-robin's on a deliberately skewed cost profile (one
-    heavy family, many cheap queries — the measured r10 shape)."""
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    import driver_sim as ds
-
-    names = [f"q{i:03d}" for i in range(60)]
-    costs = {"sf0.01": {n: 1.0 for n in names}, "sf0.1": {}, "sf1": {}}
-    for n in names[:6]:
-        costs["sf0.01"][n] = 50.0  # the heavy sf1-sensitive analogue
-    p = tmp_path / "costs.json"
-    import json
-
-    p.write_text(json.dumps(costs))
-    monkeypatch.setattr(ds, "COSTS_PATH", str(p))
-    n_shards = 6
-    slices = [
-        ds.shard_slice(names, i, n_shards, False, set()) for i in range(n_shards)
-    ]
-    assert set().union(*slices) == set(names)
-    loads = [sum(costs["sf0.01"][n] for n in s) for s in slices]
-    rr_loads = [0.0] * n_shards
-    for j, n in enumerate(sorted(names)):
-        rr_loads[j % n_shards] += costs["sf0.01"][n]
-    assert max(loads) <= max(rr_loads)
-    assert max(loads) / (sum(loads) / n_shards) < 1.2  # LPT bound ≤ 4/3

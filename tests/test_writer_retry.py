@@ -31,12 +31,15 @@ import sys
 import textwrap
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def test_retried_write_task_produces_exact_output(tmp_path):
     marker = tmp_path / "injected_failure_fired"
     script = textwrap.dedent(
         f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {REPO!r})
         import pyspark.sql.functions as F
         from pyspark import TaskContext
         from pyspark.sql import SparkSession

@@ -16,8 +16,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 MAX_DRIVER_MEMORY_MB = 64 * 1024
+
+
+def cpu_count() -> int:
+    """The engine's core count: $SPARK_GRAFT_CPUS when set, else the
+    CPUs this process may run on.  It sizes both the local master and
+    the shuffle partitions, so the two always agree with the host."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    return len(os.sched_getaffinity(0))
 
 
 def physical_memory_bytes() -> int | None:
@@ -74,9 +83,9 @@ def get_session(
       tasks at 2 slots instead of 72; the listing stays parallel, as a
       cluster's object store needs.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = cpu_count()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    n_shuffle = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
