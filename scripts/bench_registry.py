@@ -2,9 +2,8 @@
 sf0.1 and record the per-query decade slope.
 
 Why this exists (round 8): the frozen-42 headline set answers "did the
-representative queries drift round-over-round", and BENCH_LOCAL's
-69-query full sweep covers the operator families' slowest members — but
-~340 of the 411 registered plans had never been TIMED at two scales.
+representative queries drift round-over-round" — but most of the 411
+registered plans had never been TIMED at two scales.
 Correctness says they compute the right answer at sf0.01; only a slope
 says none of them hides a candidate blowup that ignites on 10× data.
 This sweep is the completeness twin of the headline bench: one pass,
@@ -23,8 +22,14 @@ bench.py; the only decision this artifact feeds is the slope flag, which
 is an intra-session ratio and therefore host-mode-invariant to first
 order.
 
+Each tier is timed with ``bench.min_time`` (min of 2 no-op-sink runs).
+
 Usage: python scripts/bench_registry.py            # all 411
        python scripts/bench_registry.py q21 q30    # substring subset
+
+A subset run is the tool for timing a hand-picked plan change: it
+writes no file.  A substring that matches no registered query exits 2
+before the Spark session starts.
 """
 
 from __future__ import annotations
@@ -37,7 +42,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import host_stamp  # noqa: E402
+from bench import host_stamp, min_time  # noqa: E402
+from udacity_datalake_spark_spark import scratch  # noqa: E402
 from udacity_datalake_spark_spark.plans import QUERIES  # noqa: E402
 from udacity_datalake_spark_spark.session import get_session  # noqa: E402
 
@@ -62,18 +68,18 @@ DIGEST_OUTPUT_BOUND = {
 }
 
 
-def _time(spark, name: str, sf_dir: str, repeats: int = 2) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
-    return round(best, 4)
-
-
 def main() -> None:
     subs = sys.argv[1:]
+    # Validate BEFORE starting the (expensive) Spark session (ADVICE r7):
+    # a typo must not cost a JVM start and then time nothing.
+    unknown = [s for s in subs if not any(s in n for n in QUERIES)]
+    if unknown:
+        print(
+            f"unknown query name(s): {', '.join(unknown)} "
+            f"(registry has {len(QUERIES)} queries, q01..q411)",
+            file=sys.stderr,
+        )
+        sys.exit(2)
     names = sorted(n for n in QUERIES if not subs or any(s in n for s in subs))
     spark = get_session(app_name="udacity-datalake-spark-bench-registry")
 
@@ -87,14 +93,13 @@ def main() -> None:
         # lost 25 minutes of timings): record the error, keep going.
         try:
             # small tier first: it doubles as the warm-up for the plan shape
-            small[name] = _time(spark, name, SMALL)
-            big[name] = _time(spark, name, BIG)
+            small[name] = min_time(lambda: QUERIES[name](spark, SMALL), 2)
+            big[name] = min_time(lambda: QUERIES[name](spark, BIG), 2)
         except Exception as ex:
             errors[name] = str(ex).splitlines()[0][:200]
             small.pop(name, None)
             print(f"  [{i}/{len(names)}] {name}: ERROR — {errors[name]}")
             sys.stdout.flush()
-            spark.catalog.clearCache()
             continue
         slope = round(big[name] / small[name], 2) if small[name] > 0 else 0.0
         print(
@@ -119,9 +124,9 @@ def main() -> None:
     for n in candidates:
         try:
             rows_small = QUERIES[n](spark, SMALL).count()
-            spark.catalog.clearCache()
+            scratch.release()
             rows_big = QUERIES[n](spark, BIG).count()
-            spark.catalog.clearCache()
+            scratch.release()
         except Exception as ex:
             errors[n] = str(ex).splitlines()[0][:200]
             flagged.append(n)

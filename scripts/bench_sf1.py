@@ -10,8 +10,9 @@ the record is stamped with the host that produced it (bench.host_stamp).
 Output: BENCH_SF1.json at the repo root —
   {queries_sf01, queries_sf1, slopes, flagged_ge20x, host, ...}
 A healthy query's slope on 10× data is ≲10-with-overhead; ≥20 is
-flagged (a window/LSH/pair term that is flat at sf0.1 but super-linear
-at sf1 is exactly what this tier exists to catch).
+flagged and fails the run (exit 1 — the verify_all stage contract): a
+window/LSH/pair term that is flat at sf0.1 but super-linear at sf1 is
+exactly what this tier exists to catch.
 
 Usage: python scripts/bench_sf1.py   (≈30-45 min; never run other
 Spark jobs concurrently)
@@ -22,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -36,16 +36,6 @@ SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO, ".localdata",
 REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
 
 
-def time_query(spark, name: str, sf_dir: str, repeats: int) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
-    return round(best, 4)
-
-
 def main() -> None:
     if not os.path.isdir(SF1_DIR):
         sys.exit(f"sf1 fixture missing at {SF1_DIR} — run scripts/make_sf1.py first")
@@ -53,19 +43,13 @@ def main() -> None:
 
     # warm-up: identical plan shapes at the smallest SF fill codegen/JIT
     for name in bench.HEADLINE:
-        if name in QUERIES:
-            QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-                "overwrite"
-            ).save()
-    spark.catalog.clearCache()
+        bench.min_time(lambda: QUERIES[name](spark, "/root/testdata/sf0.001"), 1)
 
     t_sf01: dict[str, float] = {}
     t_sf1: dict[str, float] = {}
     for name in bench.HEADLINE:
-        if name not in QUERIES:
-            continue
-        t_sf01[name] = time_query(spark, name, SF01_DIR, REPEATS)
-        t_sf1[name] = time_query(spark, name, SF1_DIR, REPEATS)
+        t_sf01[name] = bench.min_time(lambda: QUERIES[name](spark, SF01_DIR), REPEATS)
+        t_sf1[name] = bench.min_time(lambda: QUERIES[name](spark, SF1_DIR), REPEATS)
         slope = round(t_sf1[name] / t_sf01[name], 2) if t_sf01[name] > 0 else 0.0
         print(f"  {name}: sf0.1 {t_sf01[name]}s  sf1 {t_sf1[name]}s  slope {slope}")
         sys.stdout.flush()
@@ -103,6 +87,7 @@ def main() -> None:
         )
     )
     spark.stop()
+    sys.exit(1 if flagged else 0)
 
 
 if __name__ == "__main__":

@@ -22,7 +22,8 @@ edge rule's scale adaptivity) is broken and the slopes would be
 measuring the wrong graph.
 
 Output: BENCH_SF1D.json at the repo root; flag bar identical to the
-other tiers (slope >= 20 on 10x data).
+other tiers (slope >= 20 on 10x data), and a flag fails the run (exit 1
+— the verify_all stage contract).
 
 Round 9 adds ``--skew`` (VERDICT r8 #5): the graph trio (q212/q217/
 q319) timed on .localdata/sf1ds — same x10 fact volume, but one mega
@@ -45,12 +46,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import bench
+from udacity_datalake_spark_spark import scratch
 from udacity_datalake_spark_spark.plans import QUERIES
 from udacity_datalake_spark_spark.session import get_session
 
@@ -69,16 +70,6 @@ DIM_BOUND = [
     "q319_link_prediction",
     "q373_apriori_triples",
 ]
-
-
-def time_query(spark, name: str, sf_dir: str, repeats: int) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
-    return round(best, 4)
 
 
 GRAPH_TRIO = [
@@ -104,9 +95,9 @@ def run_skew_variant() -> None:
     spark = get_session(app_name="udacity-datalake-spark-bench-sf1ds")
     # graph-shape context: how concentrated did the fixture actually get
     g_uni = QUERIES["q212_triangle_count"](spark, SF1D_DIR).collect()[0]
-    spark.catalog.clearCache()
+    scratch.release()
     g_skw = QUERIES["q212_triangle_count"](spark, SF1DS_DIR).collect()[0]
-    spark.catalog.clearCache()
+    scratch.release()
     shape = {
         "sf1d": {k: int(g_uni[k]) for k in ("n_nodes", "n_edges", "n_triangles")},
         "sf1ds": {k: int(g_skw[k]) for k in ("n_nodes", "n_edges", "n_triangles")},
@@ -114,15 +105,12 @@ def run_skew_variant() -> None:
     print(f"graph shape: {shape}")
 
     for name in GRAPH_TRIO:  # warm: identical plan shapes at tiny SF
-        QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-    spark.catalog.clearCache()
+        bench.min_time(lambda: QUERIES[name](spark, "/root/testdata/sf0.001"), 1)
     t_uni: dict[str, float] = {}
     t_skw: dict[str, float] = {}
     for name in GRAPH_TRIO:
-        t_uni[name] = time_query(spark, name, SF1D_DIR, REPEATS)
-        t_skw[name] = time_query(spark, name, SF1DS_DIR, REPEATS)
+        t_uni[name] = bench.min_time(lambda: QUERIES[name](spark, SF1D_DIR), REPEATS)
+        t_skw[name] = bench.min_time(lambda: QUERIES[name](spark, SF1DS_DIR), REPEATS)
         ratio = round(t_skw[name] / t_uni[name], 2) if t_uni[name] > 0 else 0.0
         print(f"  {name}: sf1d {t_uni[name]}s  sf1ds {t_skw[name]}s  ratio {ratio}")
         sys.stdout.flush()
@@ -178,9 +166,9 @@ def main() -> None:
 
     # isomorphism invariant before any timing
     g01 = QUERIES["q212_triangle_count"](spark, SF01_DIR).collect()[0]
-    spark.catalog.clearCache()
+    scratch.release()
     g1d = QUERIES["q212_triangle_count"](spark, SF1D_DIR).collect()[0]
-    spark.catalog.clearCache()
+    scratch.release()
     iso = {
         "sf01": {k: int(g01[k]) for k in ("n_nodes", "n_edges", "n_triangles")},
         "sf1d": {k: int(g1d[k]) for k in ("n_nodes", "n_edges", "n_triangles")},
@@ -195,16 +183,13 @@ def main() -> None:
 
     # warm-up at the smallest SF fills codegen/JIT with identical shapes
     for name in DIM_BOUND:
-        QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-    spark.catalog.clearCache()
+        bench.min_time(lambda: QUERIES[name](spark, "/root/testdata/sf0.001"), 1)
 
     t_sf01: dict[str, float] = {}
     t_sf1d: dict[str, float] = {}
     for name in DIM_BOUND:
-        t_sf01[name] = time_query(spark, name, SF01_DIR, REPEATS)
-        t_sf1d[name] = time_query(spark, name, SF1D_DIR, REPEATS)
+        t_sf01[name] = bench.min_time(lambda: QUERIES[name](spark, SF01_DIR), REPEATS)
+        t_sf1d[name] = bench.min_time(lambda: QUERIES[name](spark, SF1D_DIR), REPEATS)
         slope = round(t_sf1d[name] / t_sf01[name], 2) if t_sf01[name] > 0 else 0.0
         print(f"  {name}: sf0.1 {t_sf01[name]}s  sf1d {t_sf1d[name]}s  slope {slope}")
         sys.stdout.flush()
@@ -243,6 +228,7 @@ def main() -> None:
         )
     )
     spark.stop()
+    sys.exit(1 if flagged else 0)
 
 
 if __name__ == "__main__":

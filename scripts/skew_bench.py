@@ -65,12 +65,13 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import numpy as np
+
+from bench import min_time
 
 SKEW_QUERIES = [
     "q38_salted_join",
@@ -181,14 +182,30 @@ def build_fixture(spark, base_sf_dir: str, out_dir: str, n_docs: int) -> None:
             os.symlink(os.path.join(base_sf_dir, t), dst)
 
 
-def _time_query(spark, QUERIES, name: str, sf_dir: str, repeats: int = 2) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
-    return round(best, 4)
+def dedup_secs(spark, sf_dir: str, collapse: bool) -> float:
+    """Min-of-2 seconds of the q95 dedup shape (MinHash LSH pairs →
+    connected components → anti-join of the losers) over
+    ``sf_dir/documents.parquet``, with minhash_lsh_pairs'
+    ``collapse_exact`` guard set to ``collapse``."""
+    from pyspark.sql import functions as F
+
+    from udacity_datalake_spark_spark.operators.dedup import minhash_lsh_pairs
+    from udacity_datalake_spark_spark.operators.graph import connected_components
+
+    def build():
+        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        edges = minhash_lsh_pairs(
+            d, "doc_id", "text", n=3, threshold=0.6, collapse_exact=collapse
+        )
+        labels = connected_components(edges, src="d1", dst="d2")
+        losers = labels.where(F.col("node") != F.col("component")).select(
+            F.col("node").alias("loser")
+        )
+        return d.join(
+            F.broadcast(losers), F.col("doc_id") == F.col("loser"), "left_anti"
+        )
+
+    return min_time(build, 2)
 
 
 def run_sf1_tier(spark, tmp: str) -> None:
@@ -196,8 +213,7 @@ def run_sf1_tier(spark, tmp: str) -> None:
     vecs) → huge (50k docs / sf1 facts / guarded-ANN 200k vecs; q56 on
     a √10-vector = 10×-output corpus).  Prints one JSON line
     {"metric": "skew_slopes_sf1", ...} for the SCALE.md table."""
-    from pyspark.sql import functions as F
-
+    from udacity_datalake_spark_spark import scratch
     from udacity_datalake_spark_spark.plans import QUERIES
 
     sf1_dir = os.path.join(REPO, ".localdata", "sf1")
@@ -241,13 +257,13 @@ def run_sf1_tier(spark, tmp: str) -> None:
 
     # warm-up on the big tier (same plan shapes)
     for name in corpus_queries + ["q56_embedding_near_dup"]:
-        _time_query(spark, QUERIES, name, big, repeats=1)
+        min_time(lambda: QUERIES[name](spark, big), 1)
 
     big_secs: dict[str, float] = {}
     huge_secs: dict[str, float] = {}
     for name in corpus_queries:
-        big_secs[name] = _time_query(spark, QUERIES, name, big)
-        huge_secs[name] = _time_query(spark, QUERIES, name, huge)
+        big_secs[name] = min_time(lambda: QUERIES[name](spark, big), 2)
+        huge_secs[name] = min_time(lambda: QUERIES[name](spark, huge), 2)
         print(
             f"  {name}: big {big_secs[name]}s  huge {huge_secs[name]}s  "
             f"slope {round(huge_secs[name] / big_secs[name], 2)}"
@@ -255,16 +271,16 @@ def run_sf1_tier(spark, tmp: str) -> None:
         sys.stdout.flush()
 
     # q56: time on the output-decade corpus and record n_pairs per tier
-    big_secs["q56_embedding_near_dup"] = _time_query(
-        spark, QUERIES, "q56_embedding_near_dup", big
+    big_secs["q56_embedding_near_dup"] = min_time(
+        lambda: QUERIES["q56_embedding_near_dup"](spark, big), 2
     )
-    huge_secs["q56_embedding_near_dup"] = _time_query(
-        spark, QUERIES, "q56_embedding_near_dup", huge_q56
+    huge_secs["q56_embedding_near_dup"] = min_time(
+        lambda: QUERIES["q56_embedding_near_dup"](spark, huge_q56), 2
     )
     pairs_big = QUERIES["q56_embedding_near_dup"](spark, big).count()
-    spark.catalog.clearCache()
+    scratch.release()
     pairs_huge = QUERIES["q56_embedding_near_dup"](spark, huge_q56).count()
-    spark.catalog.clearCache()
+    scratch.release()
     q56 = {
         "n_vecs": {"big": 20000, "huge": n_vec_q56},
         "n_pairs": {"big": pairs_big, "huge": pairs_huge},
@@ -298,28 +314,6 @@ def run_sf1_tier(spark, tmp: str) -> None:
     # runs here — guard-OFF's quadratic is already priced at the big
     # tier (every identical group fans C(group,2) in EVERY band); at
     # this tier it would only re-prove the blowup more slowly.
-    from udacity_datalake_spark_spark.operators.dedup import minhash_lsh_pairs
-    from udacity_datalake_spark_spark.operators.graph import connected_components
-
-    def dedup_secs(sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-            edges = minhash_lsh_pairs(
-                d, "doc_id", "text", n=3, threshold=0.6, collapse_exact=True
-            )
-            labels = connected_components(edges, src="d1", dst="d2")
-            losers = labels.where(F.col("node") != F.col("component")).select(
-                F.col("node").alias("loser")
-            )
-            d.join(
-                F.broadcast(losers), F.col("doc_id") == F.col("loser"), "left_anti"
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        return round(best, 4)
-
     big_x, huge_x = f"{tmp}/big_exact", f"{tmp}/huge_exact"
     for out_dir, n_docs in ((big_x, 5000), (huge_x, 50000)):
         os.makedirs(out_dir, exist_ok=True)
@@ -327,8 +321,9 @@ def run_sf1_tier(spark, tmp: str) -> None:
             build_skewed_documents(n_docs, exact_spam=True),
             "doc_id long, text string, lang string, source string, n_chars long",
         ).coalesce(8).write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
-    dedup_secs(big_x)  # warm
-    s_big, s_huge = dedup_secs(big_x), dedup_secs(huge_x)
+    dedup_secs(spark, big_x, collapse=True)  # warm
+    s_big = dedup_secs(spark, big_x, collapse=True)
+    s_huge = dedup_secs(spark, huge_x, collapse=True)
     print(
         json.dumps(
             {
@@ -356,6 +351,7 @@ def run_q148_evidence(spark, tmp: str) -> None:
 
     Usage: python scripts/skew_bench.py --q148-evidence
     """
+    from udacity_datalake_spark_spark import scratch
     from udacity_datalake_spark_spark.operators.dedup import hamming_band_pairs
     from udacity_datalake_spark_spark.operators.multimodal import (
         perceptual_hash64,
@@ -386,17 +382,10 @@ def run_q148_evidence(spark, tmp: str) -> None:
         # first-plan effects, inflating raw_pair_slope — min-of-2 only
         # partially mitigated it because both reps shared the cold file
         # cache.  Now every tier's timed reps compare equally warmed.
-        pair_job(dirs[tier]).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            pair_job(dirs[tier]).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        secs[tier] = round(best, 4)
+        min_time(lambda: pair_job(dirs[tier]), 1)
+        secs[tier] = min_time(lambda: pair_job(dirs[tier]), 2)
         n_pairs[tier] = pair_job(dirs[tier]).count()
-        spark.catalog.clearCache()
+        scratch.release()
     print(
         json.dumps(
             {
@@ -483,17 +472,10 @@ def run_hot_gram_evidence(spark, tmp: str) -> None:
         counts: dict[str, int] = {}
         for form, flag in (("window", False), ("groupby_join", True)):
             # one untimed warm pass per form per tier, then min-of-2
-            cross_doc_dup_hits(docs, grams, hot_gram_guard=flag).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                cross_doc_dup_hits(
-                    docs, grams, hot_gram_guard=flag
-                ).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            forms[form] = round(best, 4)
+            min_time(lambda: cross_doc_dup_hits(docs, grams, hot_gram_guard=flag), 1)
+            forms[form] = min_time(
+                lambda: cross_doc_dup_hits(docs, grams, hot_gram_guard=flag), 2
+            )
             counts[form] = cross_doc_dup_hits(
                 docs, grams, hot_gram_guard=flag
             ).count()
@@ -531,18 +513,10 @@ def main() -> None:
     build_fixture(spark, "/root/testdata/sf0.1", big, 5000)
 
     def run(sf_dir: str) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in SKEW_QUERIES:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-            out[name] = round(best, 4)
-        return out
+        return {
+            name: min_time(lambda: QUERIES[name](spark, sf_dir), 2)
+            for name in SKEW_QUERIES
+        }
 
     run(small)  # warm-up: JIT + codegen on the same plan shapes
     small_secs = run(small)
@@ -568,29 +542,6 @@ def main() -> None:
     # shape guard-OFF vs collapse_exact at both scales: OFF fans each
     # identical group quadratically in EVERY band; collapse emits
     # linear star edges, so its slope stays ~data-linear.
-    from pyspark.sql import functions as F
-    from udacity_datalake_spark_spark.operators.dedup import minhash_lsh_pairs
-    from udacity_datalake_spark_spark.operators.graph import connected_components
-
-    def dedup_secs(sf_dir: str, collapse: bool) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-            edges = minhash_lsh_pairs(
-                d, "doc_id", "text", n=3, threshold=0.6, collapse_exact=collapse
-            )
-            labels = connected_components(edges, src="d1", dst="d2")
-            losers = labels.where(F.col("node") != F.col("component")).select(
-                F.col("node").alias("loser")
-            )
-            d.join(
-                F.broadcast(losers), F.col("doc_id") == F.col("loser"), "left_anti"
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        return round(best, 4)
-
     small_x, big_x = f"{tmp}/small_exact", f"{tmp}/big_exact"
     for out_dir, base, n_docs in (
         (small_x, "/root/testdata/sf0.01", 500),
@@ -605,8 +556,8 @@ def main() -> None:
         )
     guard = {}
     for mode, collapse in (("guard_off", False), ("collapse_exact", True)):
-        dedup_secs(small_x, collapse)  # warm
-        s, b = dedup_secs(small_x, collapse), dedup_secs(big_x, collapse)
+        dedup_secs(spark, small_x, collapse)  # warm
+        s, b = dedup_secs(spark, small_x, collapse), dedup_secs(spark, big_x, collapse)
         guard[mode] = {
             "small_secs": s,
             "big_secs": b,

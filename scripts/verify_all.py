@@ -12,9 +12,12 @@ into the next):
   3. bench     — frozen-42 headline sweep at sf0.1 (bench.py →
                  BENCH_HEADLINE.json); passes on exit 0 with a
                  parseable final JSON line
-The slower tier scripts (bench_sf1.py, bench_sf1d.py, skew_bench.py)
-are opt-in via --tiers; they need the .localdata fixtures
-(scripts/make_sf1.py [--grow-dims]) and a verifiably idle host.
+The slower tier scripts (bench_sf1.py, bench_sf1d.py [--skew],
+bench_registry.py) are opt-in via --tiers.  Each fails its stage (exit
+1) on a flag: a >=20x slope on 10x data (bench_registry.py: one not
+bound by the query's own output growth), or for --skew a concentration
+ratio >= 4.  The sf1 tiers need the .localdata fixtures
+(scripts/make_sf1.py [--grow-dims [--skew]]) and a verifiably idle host.
 
 --quick: the pre-commit loop — the suite (which already contains the
 full 411-query oracle-parity sweep) + an __spark_entry__ contract smoke

@@ -440,40 +440,6 @@ def test_bench_headline_line_fits_tail():
     )
     for name in bench.HEADLINE:
         assert name in QUERIES, f"HEADLINE names unregistered query {name}"
-    for name in bench.HEADLINE_FULL:
-        assert name in QUERIES, f"HEADLINE_FULL names unregistered query {name}"
-    # the frozen set is a subset of the full sweep — diffs stay comparable
-    assert set(bench.HEADLINE) <= set(bench.HEADLINE_FULL)
-
-
-def test_bench_mirror_target_policy():
-    """Mirror-target guard (round-7 VERDICT #3 / ADVICE r6): the committed
-    BENCH_LOCAL.json records the 66-query FULL sweep; a frozen-42 driver
-    run must mirror to BENCH_HEADLINE.json instead of clobbering it.
-    Statically asserts bench.py routes the frozen-set mirror away from
-    BENCH_LOCAL.json, and that the committed BENCH_LOCAL.json (when
-    present) is a full-sweep record."""
-    import inspect
-    import json
-    import os
-
-    import bench
-
-    src = inspect.getsource(bench.main)
-    # the mirror file name must be chosen by headline set, with the
-    # frozen set routed to BENCH_HEADLINE.json
-    assert 'mirror_name = (' in src and '"BENCH_HEADLINE.json"' in src
-    assert 'if headline is HEADLINE_FULL else "BENCH_HEADLINE.json"' in src
-
-    committed = os.path.join(os.path.dirname(bench.__file__), "BENCH_LOCAL.json")
-    if os.path.exists(committed):
-        with open(committed) as f:
-            record = json.load(f)
-        assert record.get("headline_set") == "full", (
-            "committed BENCH_LOCAL.json is not a full-sweep record — a "
-            "frozen-set run clobbered it; restore from git and re-run "
-            "with SPARK_GRAFT_BENCH_FULL=1"
-        )
 
 
 def test_bench_mirror_only_at_default_scale_factor(tmp_path):
@@ -521,10 +487,12 @@ def test_scripts_do_not_hard_code_the_checkout():
 
 
 def test_verify_all_stages_name_existing_scripts():
-    """Every script a verify_all stage runs exists, so a deleted script
-    fails here rather than only when someone runs verify_all."""
+    """Every script a verify_all stage runs, README.md names or the verify
+    skill names exists, so a deleted script fails here rather than only
+    when someone runs verify_all or follows the docs."""
     import importlib.util
     import os
+    import re
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
@@ -540,15 +508,18 @@ def test_verify_all_stages_name_existing_scripts():
         if arg.startswith("scripts/") and arg.endswith(".py")
     ]
     assert len(named) >= 5, named
+    for doc in ("README.md", os.path.join(".claude", "skills", "verify", "SKILL.md")):
+        with open(os.path.join(repo, doc)) as f:
+            named += re.findall(r"scripts/\w+\.py", f.read())
     missing = [p for p in named if not os.path.isfile(os.path.join(repo, p))]
     assert not missing, missing
 
 
-def test_solo_bench_validates_before_session():
-    """ADVICE r7 (judge re-flagged r8): an unknown query name must exit
-    2 with a message BEFORE the Spark session starts, not raise a raw
-    KeyError after the JVM is up.  Subprocess run is fast because the
-    guard fires pre-session."""
+def test_bench_registry_validates_before_session():
+    """ADVICE r7 (judge re-flagged r8): a subset substring that matches
+    no registered query must exit 2 with a message BEFORE the Spark
+    session starts, not time nothing after the JVM is up.  Subprocess
+    run is fast because the guard fires pre-session."""
     import os
     import subprocess
     import sys
@@ -556,7 +527,7 @@ def test_solo_bench_validates_before_session():
     import bench
 
     proc = subprocess.run(
-        [sys.executable, "scripts/solo_bench.py", "q999_not_a_query"],
+        [sys.executable, "scripts/bench_registry.py", "q999_not_a_query"],
         cwd=os.path.dirname(bench.__file__),
         capture_output=True,
         text=True,
@@ -567,30 +538,41 @@ def test_solo_bench_validates_before_session():
     assert "q999_not_a_query" in proc.stderr
 
 
-
-
-def test_bench_duration_scaled_repeats():
+def test_bench_duration_scaled_repeats(spark, monkeypatch):
     """Round-10 VERDICT r9 #5: sub-second frozen-42 members accumulate
     >= MIN_TIMED_WORK_SEC of timed work (up to the MAX_REPEATS cap) so
     their min escapes the fixed per-run noise floor the q05
     adjudication measured; multi-second members still run exactly the
     base repeats, and explicit sub-default repeats (smoke runs) never
-    extend."""
+    extend.  Drives bench.min_time on a stubbed clock with a frame that
+    persists through spersist: every run's frames are released."""
+    import itertools
+    import types
+
     import bench
+    from udacity_datalake_spark_spark import scratch
 
     assert bench.MIN_TIMED_WORK_SEC == 2.0
     assert bench.MAX_REPEATS == 9
     assert bench.DEFAULT_REPEATS == 5
 
-    def simulate(per_run_sec: float, min_runs: int) -> int:
-        runs, acc = 0, 0.0
-        while bench._needs_another_run(runs, acc, min_runs):
-            runs += 1
-            acc += per_run_sec
-        return runs
+    def runs_of(per_run_sec: float, min_runs: int) -> int:
+        # each run reads the clock twice: start 0, end per_run_sec
+        clock = itertools.cycle([0.0, per_run_sec])
+        fake_time = types.SimpleNamespace(perf_counter=lambda: next(clock))
+        monkeypatch.setattr(bench, "time", fake_time)
+        builds = []
 
-    assert simulate(3.0, 5) == 5   # multi-second: base repeats only
-    assert simulate(0.2, 5) == 9   # 0.2s member: capped at 9 draws
-    assert simulate(0.3, 5) == 7   # stops once 2s of work accumulated
-    assert simulate(0.45, 5) == 5  # 5 x 0.45 = 2.25s >= 2s at base
-    assert simulate(0.1, 1) == 1   # explicit fast mode: no extension
+        def build():
+            builds.append(1)
+            return spark.range(4).transform(scratch.spersist)
+
+        assert bench.min_time(build, min_runs) == round(per_run_sec, 4)
+        assert scratch.outstanding() == 0
+        return len(builds)
+
+    assert runs_of(3.0, 5) == 5   # multi-second: base repeats only
+    assert runs_of(0.2, 5) == 9   # 0.2s member: capped at 9 draws
+    assert runs_of(0.3, 5) == 7   # stops once 2s of work accumulated
+    assert runs_of(0.45, 5) == 5  # 5 x 0.45 = 2.25s >= 2s at base
+    assert runs_of(0.1, 1) == 1   # explicit fast mode: no extension

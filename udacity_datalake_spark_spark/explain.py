@@ -18,11 +18,6 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (post-AQE-planning) physical plan."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def scan_pushdown(df: DataFrame) -> list[str]:
     """The PushedFilters lines of every file scan in the plan."""
     return [

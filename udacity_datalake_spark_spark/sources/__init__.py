@@ -1,4 +1,4 @@
-from udacity_datalake_spark_spark.sources.readers import read_json_feed, read_table, register_views
+from udacity_datalake_spark_spark.sources.readers import read_json_feed, read_table
 from udacity_datalake_spark_spark.sources.writers import write_parquet
 
-__all__ = ["read_table", "read_json_feed", "register_views", "write_parquet"]
+__all__ = ["read_table", "read_json_feed", "write_parquet"]

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from udacity_datalake_spark_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
+from udacity_datalake_spark_spark.schemas import TESTDATA_SCHEMAS
 
 
 def read_table(
@@ -94,12 +94,6 @@ def parquet_row_count(path: str) -> int | None:
         return pq.ParquetFile(path).metadata.num_rows
     except Exception:
         return None
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = None) -> None:
-    """Register every testdata table as a temp view (for the SQL surface)."""
-    for name in names or TABLE_NAMES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def read_json_feed(
