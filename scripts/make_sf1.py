@@ -109,7 +109,7 @@ def main() -> None:
         write(
             "nation",
             f"""
-            SELECT n_nationkey + r * 25 AS n_nationkey,
+            SELECT CAST(n_nationkey + r * 25 AS INTEGER) AS n_nationkey,
                    CASE WHEN r = 0 THEN n_name ELSE n_name || '#' || r END AS n_name,
                    n_regionkey
             FROM '{SRC}/nation.parquet', reps
@@ -120,7 +120,7 @@ def main() -> None:
             f"""
             SELECT c_custkey + r * 15000 AS c_custkey,
                    CASE WHEN r = 0 THEN c_name ELSE c_name || '#' || r END AS c_name,
-                   c_nationkey + r * 25 AS c_nationkey,
+                   CAST(c_nationkey + r * 25 AS INTEGER) AS c_nationkey,
                    c_acctbal + r * 100000 AS c_acctbal,
                    c_mktsegment
             FROM '{SRC}/customer.parquet', reps
@@ -131,7 +131,7 @@ def main() -> None:
             f"""
             SELECT s_suppkey + r * 1000 AS s_suppkey,
                    CASE WHEN r = 0 THEN s_name ELSE s_name || '#' || r END AS s_name,
-                   s_nationkey + r * 25 AS s_nationkey,
+                   CAST(s_nationkey + r * 25 AS INTEGER) AS s_nationkey,
                    s_acctbal + r * 100000 AS s_acctbal
             FROM '{SRC}/supplier.parquet', reps
             """,

@@ -490,24 +490,9 @@ def run_hot_gram_evidence(spark, tmp: str) -> None:
     print(json.dumps({"metric": "hot_gram_guard_evidence", "tiers": result}))
 
 
-def main() -> None:
+def run_default(spark, tmp: str) -> None:
     from udacity_datalake_spark_spark.plans import QUERIES
-    from udacity_datalake_spark_spark.session import get_session
 
-    spark = get_session(app_name="skew-bench")
-    tmp = tempfile.mkdtemp(prefix="skewfix-")
-    if "--hot-gram-evidence" in sys.argv:
-        run_hot_gram_evidence(spark, tmp)
-        spark.stop()
-        return
-    if "--q148-evidence" in sys.argv:
-        run_q148_evidence(spark, tmp)
-        spark.stop()
-        return
-    if "--sf1" in sys.argv:
-        run_sf1_tier(spark, tmp)
-        spark.stop()
-        return
     small, big = f"{tmp}/small", f"{tmp}/big"
     build_fixture(spark, "/root/testdata/sf0.01", small, 500)
     build_fixture(spark, "/root/testdata/sf0.1", big, 5000)
@@ -564,7 +549,23 @@ def main() -> None:
             "slope": round(b / s, 2) if s > 0 else 0.0,
         }
     print(json.dumps({"metric": "minhash_guard_identical_corpus", **guard}))
-    spark.stop()
+
+
+def main() -> None:
+    from udacity_datalake_spark_spark.session import get_session
+
+    spark = get_session(app_name="skew-bench")
+    # the skewed corpora are written under $TMPDIR and removed on exit
+    with tempfile.TemporaryDirectory(prefix="skewfix-") as tmp:
+        if "--hot-gram-evidence" in sys.argv:
+            run_hot_gram_evidence(spark, tmp)
+        elif "--q148-evidence" in sys.argv:
+            run_q148_evidence(spark, tmp)
+        elif "--sf1" in sys.argv:
+            run_sf1_tier(spark, tmp)
+        else:
+            run_default(spark, tmp)
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -8,13 +8,16 @@ at sf0.01:
 - ``hash`` / ``single`` / ``range`` / ``other``: distinct (non-reused)
   shuffle Exchange nodes by partitioning kind,
 - ``bnlj`` / ``cartesian``: nested-loop join node counts,
-- ``python_eval``: whether the plan crosses into a Python worker.
+- ``python_eval``: whether the plan crosses into a Python worker,
+- ``jobs_at_build``: Spark jobs fired while the query is BUILT (eager
+  gate actions), counted under a job group set around the build.
 
-tests/test_plans.py::test_registry_plan_budget_snapshot asserts every
-query stays WITHIN its snapshot (and exactly matches the python_eval
-flag), so a regression that adds a shuffle, a single-partition window on
-fact data, a nested-loop join, or a stray Python UDF names the query in
-CI instead of surfacing as a slow cluster job.
+tests/test_plans.py::test_registry_plan_budget_snapshot measures with
+``build_shape`` and asserts every query stays WITHIN its snapshot (and
+exactly matches the python_eval flag), so a regression that adds a
+shuffle, a single-partition window on fact data, a nested-loop join, an
+eager build action or a stray Python UDF names the query in CI instead
+of surfacing as a slow cluster job.
 
 Usage: python scripts/snapshot_plans.py [sf_dir]   (rewrites the JSON)
 """
@@ -25,6 +28,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -54,6 +58,21 @@ def plan_shape(df) -> dict:
     }
 
 
+def build_shape(spark, build) -> tuple:
+    """Call the zero-argument ``build()`` under a job group of its own;
+    return its frame and ``plan_shape`` plus ``jobs_at_build``."""
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "query build")
+    try:
+        df = build()
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return df, {**plan_shape(df), "jobs_at_build": jobs}
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     subs = sys.argv[2:]
@@ -68,7 +87,7 @@ def main() -> None:
     for name in names:
         t0 = time.perf_counter()
         try:
-            shapes[name] = plan_shape(QUERIES[name](spark, sf_dir))
+            _, shapes[name] = build_shape(spark, lambda: QUERIES[name](spark, sf_dir))
             print(f"  {name}: {shapes[name]} ({time.perf_counter()-t0:.2f}s)")
         finally:
             spark.catalog.clearCache()

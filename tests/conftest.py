@@ -20,25 +20,6 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-@pytest.fixture(autouse=True)
-def _leak_reporter(request):
-    """Diagnostic twin of the module gate (SPARK_GRAFT_LEAK_REPORT=1):
-    prints the name of every TEST that leaves the SQL cache non-empty
-    and clears it, so offenders are pinpointed in one run instead of
-    bisecting a module.  Off by default — zero overhead."""
-    yield
-    if os.environ.get("SPARK_GRAFT_LEAK_REPORT", "0") != "1":
-        return
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    if sess is None:
-        return
-    if not sess._jsparkSession.sharedState().cacheManager().isEmpty():
-        print(f"\nLEAK: {request.node.nodeid}")
-        sess.catalog.clearCache()
-
-
 @pytest.fixture(autouse=True, scope="module")
 def _no_persist_leaks():
     """Structural persist-hygiene gate (round-7 VERDICT #6): after each

@@ -678,7 +678,10 @@ def test_minhash_bucket_cap_bounds_candidates_keeps_recall(spark):
 # MINHASH_SCHEME = 2 per-column formula they replaced: a persisted LSH index
 # stamped with scheme 2 would otherwise silently stop colliding with fresh
 # signatures.  Also pinned: what building the build-heavy headliners costs
-# before anything executes, the eager gate jobs they fire.
+# before anything executes, the eager gate jobs they fire.  These pins are
+# exact and taken at the test tier; tests/test_plans.py::
+# test_registry_plan_budget_snapshot bounds the same count from above for
+# every query at sf0.01.
 
 LSH_QUERIES = [
     "q46_minhash_lsh",
@@ -694,10 +697,10 @@ LSH_QUERIES = [
 #: counts are the same on 2 and 4 cores.  A change here is a decision — a
 #: new eager action in the build path.
 JOBS_AT_BUILD = {
-    "q95_dedup_corpus": 14,
-    "q195_curation_pipeline": 14,
-    "q212_triangle_count": 13,
-    "q319_link_prediction": 10,
+    "q95_dedup_corpus": 13,
+    "q195_curation_pipeline": 13,
+    "q212_triangle_count": 12,
+    "q319_link_prediction": 9,
 }
 
 

@@ -16,6 +16,7 @@ from udacity_datalake_spark_spark.explain import (
 from udacity_datalake_spark_spark.operators.joins import left_join_or, range_band_join, salted_join
 from udacity_datalake_spark_spark.plans import QUERIES
 from udacity_datalake_spark_spark.sources.readers import read_table
+from scripts.snapshot_plans import build_shape
 
 
 def test_filter_pushed_to_parquet_scan(spark, sf_dir):
@@ -563,23 +564,11 @@ _PLAN_SNAPSHOT_PATH = (
 _PLAN_SNAPSHOT = __import__("json").loads(_PLAN_SNAPSHOT_PATH.read_text())
 
 
-def _plan_over_budget(df, snap: dict) -> dict:
-    """Plan dimensions of ``df`` that exceed their snapshot budget, as
-    ``{dimension: (got, budget)}``: shuffle exchanges by partitioning
-    kind and nested-loop/cartesian join nodes."""
-    from udacity_datalake_spark_spark.explain import exchange_kinds
-
-    kinds = exchange_kinds(df)
-    joins = join_nodes(df)
-    got = {
-        "hash": kinds.count("hash"),
-        "single": kinds.count("single"),
-        "range": kinds.count("range"),
-        "other": kinds.count("other"),
-        "bnlj": joins.count("BroadcastNestedLoopJoin"),
-        "cartesian": joins.count("CartesianProduct"),
-    }
-    return {k: (got[k], snap[k]) for k in got if got[k] > snap[k]}
+def _plan_over_budget(shape: dict, snap: dict) -> dict:
+    """Dimensions of a measured ``shape`` (exchanges by kind, nested-loop
+    joins, build jobs) above their snapshot budget, as ``{dimension:
+    (got, budget)}``."""
+    return {k: (v, snap[k]) for k, v in shape.items() if k != "python_eval" and v > snap[k]}
 
 
 def test_plan_snapshot_covers_registry():
@@ -594,39 +583,51 @@ def test_plan_snapshot_covers_registry():
 def test_registry_plan_budget_snapshot(spark, sf_dir, name):
     """Registry-wide plan freeze (round 4): every query's physical plan
     must stay within its checked-in snapshot — shuffle exchanges by
-    partitioning kind, nested-loop/cartesian join nodes, and the
+    partitioning kind, nested-loop/cartesian join nodes, the Spark jobs
+    fired while it is built (its eager gate actions), and the
     python-eval flag (exact match: a query silently FALLING OFF an
     allowlisted Arrow path matters as much as one falling onto it).
     Regressions name the query and the dimension that grew.  Budgets are
-    upper bounds, so a plan IMPROVEMENT (fewer exchanges) passes;
-    regenerate the snapshot (scripts/snapshot_plans.py) to ratchet it
-    down."""
+    upper bounds, so an IMPROVEMENT (fewer exchanges or build jobs)
+    passes; regenerate the snapshot (scripts/snapshot_plans.py) to
+    ratchet it down.  The snapshot is taken at sf0.01; no query fires
+    more build jobs at the sf0.001 test tier."""
     snap = _PLAN_SNAPSHOT.get(name)
     if snap is None:
         _pytest.skip("covered by test_plan_snapshot_covers_registry")
-    df = QUERIES[name](spark, sf_dir)
-    over = _plan_over_budget(df, snap)
-    assert not over, (name, over)
-    assert has_python_eval(df) == snap["python_eval"], name
+    _, shape = build_shape(spark, lambda: QUERIES[name](spark, sf_dir))
     spark.catalog.clearCache()
+    over = _plan_over_budget(shape, snap)
+    assert not over, (name, over)
+    assert shape["python_eval"] == snap["python_eval"], name
 
 
 def test_plan_budget_catches_planted_exchange(spark, sf_dir):
-    """The plan-budget snapshot is the regression gate for plan shape, so
-    it must see a planted regression: with broadcast joins disabled,
-    q05's dim join becomes a sort-merge join with two more hash
-    exchanges, and the comparison names the grown dimension."""
+    """The plan-budget snapshot is the regression gate for plan shape and
+    build cost, so it must see planted regressions: with broadcast joins
+    disabled, q05's dim join becomes a sort-merge join with two more hash
+    exchanges; a build that fires one eager action more than its budget
+    grows ``jobs_at_build``.  The comparison names the grown dimension."""
     name = "q05_inner_join"
     snap = _PLAN_SNAPSHOT[name]
-    assert not _plan_over_budget(QUERIES[name](spark, sf_dir), snap)
+
+    def build(eager_action=False):
+        df = QUERIES[name](spark, sf_dir)
+        if eager_action:
+            df.limit(1).collect()
+        return df
+
+    assert not _plan_over_budget(build_shape(spark, build)[1], snap)
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        over = _plan_over_budget(QUERIES[name](spark, sf_dir), snap)
+        over = _plan_over_budget(build_shape(spark, build)[1], snap)
     finally:
         spark.conf.set(key, old)
     assert over == {"hash": (2, 0)}, over
+    over = _plan_over_budget(build_shape(spark, lambda: build(eager_action=True))[1], snap)
+    assert set(over) == {"jobs_at_build"}, over
 
 
 

@@ -4,6 +4,8 @@ cosine_near_dup_pairs auto strategy pick (VERDICT r10 #3)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from udacity_datalake_spark_spark import scratch
@@ -72,11 +74,19 @@ def test_track_replace_bounds_scope(spark):
     scratch.release("__rep__")
 
 
-def test_parquet_row_count_matches_scan(spark):
+def test_parquet_row_count_matches_scan(spark, tmp_path):
+    """The footer count equals a scan's, for a single-file table and for
+    a Spark-written directory, whose ``_SUCCESS`` marker and ``.crc``
+    files are not parquet and must be skipped."""
     path = f"{SF_DIR}/embeddings.parquet"
     n_footer = parquet_row_count(path)
     n_scan = read_table(spark, SF_DIR, "embeddings").count()
     assert n_footer == n_scan
+    written = str(tmp_path / "written.parquet")
+    spark.range(37).repartition(3).write.parquet(written)
+    names = os.listdir(written)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert parquet_row_count(written) == spark.read.parquet(written).count() == 37
     assert parquet_row_count("/nonexistent/nope.parquet") is None
 
 

@@ -100,7 +100,8 @@ def _lineitem_with_duplicate_intervals() -> pd.DataFrame:
                 }
             )
         ok += 1
-    return pd.DataFrame(rows)
+    # l_linenumber is declared int: store int32, not pandas' int64
+    return pd.DataFrame(rows).astype({"l_linenumber": "int32"})
 
 
 @pytest.mark.parametrize("order_seed", [0, 1])

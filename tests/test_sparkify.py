@@ -22,7 +22,7 @@ from udacity_datalake_spark_spark.plans.sparkify import (
     songs_readback_shape,
 )
 from udacity_datalake_spark_spark.schemas import LOG_DATA_SCHEMA, SONG_DATA_SCHEMA
-from udacity_datalake_spark_spark.sources.readers import read_json_feed
+from udacity_datalake_spark_spark.sources.readers import read_json_feed, read_table
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -330,3 +330,24 @@ def test_readback_type_mismatch_fails_loudly(spark, song_data, log_data, tmp_pat
     bad.write.mode("overwrite").parquet(f"{out}/artists")
     with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
         process_log_data(spark, log_data, out)
+
+
+def test_read_table_type_drift_fails_loudly(spark, tmp_path):
+    """``read_table`` reads with the declared ``TESTDATA_SCHEMAS`` types,
+    so an ``events`` table whose ``user_id`` was written as a string fails
+    the scan instead of coming back as a string, a narrower int still
+    widens to the declared long, and a column the table does not declare
+    raises before any read."""
+    d = str(tmp_path)
+
+    def plant(ddl, row):
+        spark.createDataFrame([row], ddl).write.mode("overwrite").parquet(f"{d}/events.parquet")
+        return read_table(spark, d, "events")
+
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        plant("event_id long, user_id string", (1, "7")).collect()
+    widened = plant("event_id long, user_id int", (1, 7))
+    assert widened.dtypes == [("event_id", "bigint"), ("user_id", "bigint")]
+    assert [tuple(r) for r in widened.collect()] == [(1, 7)]
+    with pytest.raises(ValueError, match="'events'.*'extra'"):
+        plant("event_id long, user_id long, extra int", (1, 7, 0))

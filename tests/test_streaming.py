@@ -20,7 +20,7 @@ from udacity_datalake_spark_spark.streaming.windows import (
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir, tmp_path_factory):
     """Materialize events as a multi-file parquet directory (the stream
-    source shape) — keeps the nanos→micros conversion from read_table."""
+    source shape), read through read_table with its declared schema."""
     path = str(tmp_path_factory.mktemp("stream") / "events")
     read_table(spark, sf_dir, "events").repartition(4).write.parquet(path)
     return path

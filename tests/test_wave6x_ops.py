@@ -247,7 +247,7 @@ def test_partition_modularity_two_cliques(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
     spark.createDataFrame(
         [(s, 0 if s <= 3 else 1) for s in range(1, 7)],
-        "s_suppkey long, s_nationkey long",
+        "s_suppkey long, s_nationkey int",
     ).write.mode("overwrite").parquet(f"{d}/supplier.parquet")
     r = QUERIES["q381_partition_modularity"](spark, d).first()
     assert r.n_edges == 7

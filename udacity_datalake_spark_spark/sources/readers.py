@@ -4,18 +4,16 @@ Covers the reference's scan surface (SURVEY.md §2.1):
 
 - S1/S2 (JSON scans with globs, reference etl.py:35-36,77-78) →
   ``read_json_feed`` with an explicit StructType — no inference scan.
-- S3/S4 (parquet read-back, reference etl.py:139,144-146) → ``read_table``
-  with partition discovery via base path.  The reference's
-  ``songs/*/*/*`` glob silently dropped the partition columns
-  (SURVEY.md §4.3.4); ``drop_partition_columns`` reproduces that behavior
-  explicitly when compat is wanted.
+- S3/S4 (parquet scans) → ``read_table`` with the declared
+  ``TESTDATA_SCHEMAS`` types — no inference job.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,40 +27,40 @@ def read_table(
     name: str,
     columns: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Read one testdata table; optional projection so column pruning
-    reaches the parquet scan even when callers forget to select.
+    """Read one testdata table with its declared schema; optional
+    projection so column pruning reaches the parquet scan even when
+    callers forget to select.
 
-    Nanosecond-precision parquet timestamps (events.ts) are illegal for
-    Spark's vectorized reader; read them as raw INT64 nanos
-    (``nanosAsLong``, a runtime SQL conf — set defensively so the driver's
-    own session works too) and truncate to microsecond TimestampType,
-    matching DuckDB's nanos→micros view of the same file.
+    The read schema is the ``TESTDATA_SCHEMAS[name]`` field of each column
+    in the file's footer (one driver-side pyarrow read, no Spark job).  A
+    column the file lacks is absent; an undeclared one raises ValueError;
+    a stored type unlike the declared one fails the scan (a narrower int
+    widens to long).  Nanosecond timestamps (physical INT64, as pandas
+    writes them; not Spark's INT96) are illegal for Spark's vectorized
+    reader: they are read as raw nanos (``nanosAsLong``) and truncated to
+    microsecond TimestampType, DuckDB's view of the same file.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # scan-level NTZ→timestamp so time predicates stay pushdown-eligible
-    # (set defensively for sessions not built by session.get_session; the
-    # TimestampNTZType branch below is then a dead fallback)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    expected = TESTDATA_SCHEMAS.get(name)
-    if expected is not None:
-        for field in expected.fields:
-            actual = df.schema[field.name].dataType if field.name in df.columns else None
-            if isinstance(field.dataType, T.TimestampType) and isinstance(actual, T.LongType):
-                # integer division — float division of int64 nanos would
-                # lose precision (2^63 ≫ 2^53 double mantissa)
-                df = df.withColumn(
-                    field.name, F.timestamp_micros(F.expr(f"`{field.name}` div 1000"))
-                )
-            elif isinstance(field.dataType, T.TimestampType) and isinstance(
-                actual, T.TimestampNTZType
-            ):
-                # parquet writers may mark the column isAdjustedToUTC=false
-                # (TIMESTAMP_NTZ).  The engine canonicalizes event time to
-                # instants; with the session pinned to UTC the cast is
-                # value-preserving, and downstream integer time math
-                # (unix_micros) only accepts TimestampType.
-                df = df.withColumn(field.name, F.col(field.name).cast(T.TimestampType()))
+    path = f"{sf_dir}/{name}.parquet"
+    footer = next(ds.dataset(path, format="parquet").get_fragments()).metadata.schema
+    physical = {footer.column(i).path: footer.column(i).physical_type for i in range(len(footer))}
+    declared = TESTDATA_SCHEMAS.get(name, T.StructType())
+    fields, nanos = [], []
+    for col in footer.to_arrow_schema():
+        if col.name not in declared.names:
+            raise ValueError(f"table {name!r}: column {col.name!r} is not declared")
+        t = col.type
+        if physical.get(col.name) == "INT64" and pa.types.is_timestamp(t) and t.unit == "ns":
+            nanos.append(col.name)
+            fields.append(T.StructField(col.name, T.LongType()))
+        else:
+            fields.append(declared[col.name])
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(T.StructType(fields)).parquet(path)
+    for col in nanos:
+        # integer division — float division of int64 nanos would lose
+        # precision (2^63 ≫ 2^53 double mantissa)
+        df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     if columns is not None:
         df = df.select(*columns)
     return df
@@ -70,7 +68,7 @@ def read_table(
 
 def parquet_row_count(path: str) -> int | None:
     """Exact row count of a parquet file/directory from FOOTER metadata
-    only — a handful of driver-side stat+footer reads, NO Spark job.
+    only — NO Spark job; like Spark, ``_``/``.`` files are skipped.
 
     The lazy-strategy input for size-dependent operators (round 11,
     VERDICT r10 #3): ``cosine_near_dup_pairs(prefilter='auto')`` used to
@@ -79,19 +77,8 @@ def parquet_row_count(path: str) -> int | None:
     job-free.  Returns None when the path isn't readable parquet (the
     caller then falls back to a real count).
     """
-    import pyarrow.parquet as pq
-
     try:
-        if os.path.isdir(path):
-            files = [
-                e.path
-                for e in os.scandir(path)
-                if e.is_file() and not e.name.startswith((".", "_"))
-            ]
-            if not files:
-                return None
-            return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        return pq.ParquetFile(path).metadata.num_rows
+        return ds.dataset(path, format="parquet").count_rows()
     except Exception:
         return None
 
